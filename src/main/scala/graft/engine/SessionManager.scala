@@ -145,11 +145,13 @@ final class SessionManager(root: SparkSession, reaperPeriodMs: Long = 1000L) {
       h.cachedFrames.clear()
       // session-scoped index handles (both families) die with the
       // session (their files live under the spool and go with the
-      // recursive delete)
+      // recursive delete). Graph versions are condemned, not just
+      // dropped: that releases their cached node frames, and a search
+      // still in flight cannot leave a fresh one behind on a dead dir
       graft.pipeline.AnnIndex.list().filter(_.startsWith(id + "/"))
         .foreach(graft.pipeline.AnnIndex.drop)
       graft.pipeline.GraphIndex.list().filter(_.startsWith(id + "/"))
-        .foreach(graft.pipeline.GraphIndex.drop)
+        .foreach(graft.pipeline.GraphIndex.dropAndDelete)
       try {
         val d = h.spoolDir.toFile
         // recursive: the spool holds TREES now (cell-partitioned index

@@ -44,16 +44,26 @@ object AnnIndex {
   /** `numCells` is the ACTUAL cell count (Lloyd drops empty cells);
     * `cellsRequested` is what the build asked for — kept so
     * [[buildIfAbsent]] can tell "requested 8, trained down to 6"
-    * from "requested 6" when deciding reuse.
+    * from "requested 6" when deciding reuse. `codesSchema` is the
+    * codes table's schema (cell included), taken from the written
+    * frame at build or inferred once at open, so searches never run
+    * a footer-inference job.
     */
   case class Handle(
       dir: String,
       m: Int, ksub: Int, dim: Int, numCells: Int, cellsRequested: Int,
       idCol: String, vecCol: String,
       codebooks: Array[Array[Array[Double]]],
-      centroids: Seq[(Long, Array[Double])]) {
+      centroids: Seq[(Long, Array[Double])],
+      codesSchema: StructType) {
     def codesPath: String = s"$dir/codes"
   }
+
+  /** The codes table as a lazy scan. The file listing stays per call
+    * ([[append]] adds files in place); the schema does not.
+    */
+  private def codes(spark: SparkSession, h: Handle): DataFrame =
+    spark.read.schema(h.codesSchema).parquet(h.codesPath)
 
   /** Train on one shared bounded sample, then assign + encode the
     * corpus in a single distributed pass and write it back
@@ -125,7 +135,7 @@ object AnnIndex {
     writeSideTables(emb.sparkSession, dir, m, ksub, dim, cellsRequested,
       idCol, vecCol, books, centPairs)
     Handle(dir, m, ksub, dim, centPairs.size, cellsRequested, idCol, vecCol,
-      books, centPairs)
+      books, centPairs, indexed.schema)
   }
 
   private def writeSideTables(
@@ -200,7 +210,8 @@ object AnnIndex {
     val cents = spark.read.parquet(s"$dir/cells").orderBy("cell").collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
     Handle(dir, m, ksub, dim, cents.size, meta.getInt(5), meta.getString(6),
-      meta.getString(7), books, cents)
+      meta.getString(7), books, cents,
+      spark.read.parquet(s"$dir/codes").schema)
   }
 
   /** Open if a complete index exists at `dir` with matching
@@ -307,11 +318,11 @@ object AnnIndex {
     val (dotTab, nrm2Tab, qNorm) = Pq.adcTables(q, handle.codebooks)
     val probeCells: Seq[Long] = Ivf.probeCells(q, handle.centroids, nprobe)
     val idCol = handle.idCol
-    val codes = spark.read.parquet(handle.codesPath)
+    val probed = codes(spark, handle)
       .where(col("cell").isin(probeCells: _*))
     val excluded = excludeId match {
-      case Some(id) => codes.where(col(idCol) =!= lit(id))
-      case None => codes
+      case Some(id) => probed.where(col(idCol) =!= lit(id))
+      case None => probed
     }
     // roundAdc = the oracle-twin discipline (Pq.searchTopKSeeded):
     // score and ORDER on the 6-dp-rounded ADC so the top-k cut is
@@ -388,7 +399,7 @@ object AnnIndex {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("adc_sim").desc, col(idCol))
-    spark.read.parquet(handle.codesPath)
+    codes(spark, handle)
       .where(col("cell").isin(allCells: _*))
       .select(col(idCol), col("cell"), explode(array(scoreCols: _*)).as("qs"))
       .select(col("qs.query_id").as("query_id"), col(idCol),

@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Graph-based ANN — the third index family beside the hash buckets
   * (LSH, s02/s17) and the coarse quantizers (IVF/PQ/SQ, s03/s12/s09):
@@ -462,19 +463,18 @@ object GraphAnn {
     * vectors by id (the seed discipline — s50's declared shape), or
     * an EXPLICIT id set (`coarseEntryIds`) for callers whose coarse
     * layer is computed offline — e.g. k-means medoids (the round-21
-    * `__gentry_ab` medoid arm). Returns (dst, v) rows.
+    * `__gentry_ab` medoid arm). Returns `vecs`' rows with id renamed
+    * dst: (dst, v), or (dst, v, nbrs) off a node frame.
     */
   private def coarseFrame(vecs: DataFrame, mn: Long,
       coarseEntryK: Option[Int],
       coarseEntryIds: Option[Seq[Long]]): Option[DataFrame] =
     coarseEntryK.map { ck =>
       require(ck >= 1, s"coarseEntryK must be >= 1, got $ck")
-      vecs.where(col("id") < lit(mn + ck.toLong))
-        .select(col("id").as("dst"), col("v"))
+      vecs.where(col("id") < lit(mn + ck.toLong)).withColumnRenamed("id", "dst")
     }.orElse(coarseEntryIds.map { ids =>
       require(ids.nonEmpty, "coarseEntryIds must be non-empty")
-      vecs.where(col("id").isin(ids: _*))
-        .select(col("id").as("dst"), col("v"))
+      vecs.where(col("id").isin(ids: _*)).withColumnRenamed("id", "dst")
     })
 
   /** Shared serving prep: fanned-out (id, v) cache + corpus stats.
@@ -672,13 +672,16 @@ object GraphAnn {
 
   /** Driver-LOCAL query frame: one collect job over the corpus cache,
     * rebuilt as a LocalRelation (qid, qv). Every walk broadcasts the
-    * query side once per hop (plus the exact legs) — off a cached
-    * distributed frame each broadcast is its own collect job, off a
-    * LocalRelation it is a driver-side no-op, so this one job replaces
-    * hops+2 of them per walk (§2.4). The rows are query-bounded
-    * (|q| ≤ 256 on every serve path — the same driver-data class as
-    * the beam itself). Returns the local frame plus its row count
-    * (the absent-id guard's input, saving the separate count job).
+    * query side once per hop (plus the exact legs). Off a cached
+    * distributed frame each broadcast would first re-collect the
+    * query rows from the cache; off a LocalRelation it does not — but
+    * it is NOT free: Spark 4.1 still runs a small job (4 tasks here)
+    * per broadcast of a local relation, so `broadcast(local) ⋈ scan`
+    * collects in 2 jobs, and 3 with a second local broadcast. The
+    * rows are query-bounded (|q| ≤ 256 on every serve path — the same
+    * driver-data class as the beam itself). Returns the local frame
+    * plus its row count (the absent-id guard's input, saving the
+    * separate count job).
     */
   private def localQueryFrame(vecs: DataFrame,
       queryIds: Seq[Long]): (DataFrame, Long) = {
@@ -767,7 +770,7 @@ object GraphAnn {
             // |queries|·|coarse| scores — flat in corpus size. Audited
             // as hop 0 (the hop-0 "beam" is the rank-1 entry alone).
             // The coarse scan streams; the LOCAL query frame is the
-            // free broadcast side (same rows, one job instead of two).
+            // broadcast side (no re-collect of the query rows).
             val scored0 = coarse.crossJoin(broadcast(qframe))
               .where(col("dst") =!= col("qid"))
               .withColumn("cs", Similarity.cosine(col("v"), col("qv")))
@@ -941,7 +944,8 @@ object GraphAnn {
     // batch collected ONCE as a driver-local query frame (the same
     // query-bounded driver-data class as the beam it feeds): the old
     // cached bvecs was re-collected by every hop's qframe broadcast;
-    // the LocalRelation makes those broadcasts driver-side no-ops
+    // off the LocalRelation no hop re-reads the batch (each broadcast
+    // still runs its own small job — see [[localQueryFrame]])
     val bqPlan = batch.select(col(idCol).as("qid"), col(vecCol).as("qv"))
     val bRows = bqPlan.collect()
     val nBatch = bRows.length.toLong
@@ -949,7 +953,7 @@ object GraphAnn {
     val qframe = spark.createDataFrame(
       java.util.Arrays.asList(bRows: _*), bqPlan.schema)
     // id spaces must be disjoint — ids-only probe (the local batch
-    // ids broadcast for free), loud failure
+    // ids are the broadcast side), loud failure
     require(qframe.select(col("qid").as("id"))
       .join(vecs.select(col("id")), Seq("id")).limit(1).count() == 0L,
       "batch ids collide with corpus ids")
@@ -1349,8 +1353,8 @@ object GraphAnn {
           inParallel3(spark.sparkContext)({
             // ---- leg 1: APPEND (the s48 audit — driver-local beam,
             // one action per hop, counters as plain arithmetic; the
-            // batch collects ONCE into a LocalRelation so every hop's
-            // query-side broadcast is a driver-side no-op) ----
+            // batch collects ONCE into a LocalRelation so no hop's
+            // query-side broadcast re-reads it) ----
             val bqPlan = batch.select(col(idCol).as("qid"),
               col(vecCol).as("qv"))
             val bRows = bqPlan.collect()
@@ -1531,12 +1535,29 @@ object GraphAnn {
     * recall-audited DIAGNOSTIC — its exact leg is O(|queries|·N),
     * the audit's cost, which a production read must not pay).
     *
-    * Scale shape: the walk touches O(|queries|·beam·degree) vectors
-    * per hop; the final cut is |queries|·k rows collected driver-side
-    * (|queries| capped loudly — the Pq batch discipline), so the
-    * result is driver-local and every cache is released before
-    * returning. Cosine is rounded to 6 dp, the engine-portable
-    * contract every scored read here follows.
+    * Serving state: the walk reads the version's NODE FRAME
+    * ([[nodeFrame]]: (id, v, nbrs), cached once per (index version,
+    * corpus) and released with the version through
+    * [[IndexLifecycle.ServingState]]). A request pays one collect of
+    * its query vectors plus ONE scoring action per round — the entry
+    * round and one per hop. A round joins a local (qid, dst, qv)
+    * relation to the frame and returns (qid, dst, cs, nbrs), so the
+    * next hop's candidates (beam ∪ the beam's neighbour lists, minus
+    * the query, distinct) are built on the driver: no frontier join,
+    * no per-request corpus cache. Only this read walks the node
+    * frame; the eager audit and mutation walkers
+    * ([[graphSearchWithTombstones]], [[graphBeamSearchLoaded]], the
+    * append, maintenance and write-back paths) keep their hop loop
+    * ([[walkBeamLocal]], [[beamServe]]) over a per-call edge closure.
+    *
+    * Scale shape: the frame is corpus-sized and built once per
+    * version (one shuffle join at the first search); each round moves
+    * O(|queries|·beam·degree) rows — the local relation is its
+    * broadcast side, the frame never moves — and the final cut is
+    * |queries|·k rows (|queries| capped loudly — the Pq batch
+    * discipline), so the result is driver-local. Cosine is rounded to
+    * 6 dp, the engine-portable contract every scored read here
+    * follows.
     *
     * @return one row per (query, rank 1..k): (query_id, neighbor_id,
     *         cosine, rank) — unsorted, callers order
@@ -1553,47 +1574,129 @@ object GraphAnn {
     require(hops >= 1, s"bad hops=$hops")
     require(queryIds.nonEmpty && queryIds.distinct.size <= 256,
       s"query batch must be 1..256 ids per call, got ${queryIds.distinct.size}")
-    val spark = corpus.sparkSession
-    val (vecs, n, mn, _) = servingVecs(corpus, vecCol, idCol)
-    try {
-      requireHandleMatches(handle, n, mn, idCol, vecCol)
-      val und = undirectedWalk(GraphIndex.edges(spark, handle)).cache()
-      try {
-        val (qframe, nQ) = localQueryFrame(vecs, queryIds)
-        require(nQ == queryIds.distinct.size.toLong,
-          s"${queryIds.distinct.size - nQ} of ${queryIds.distinct.size} " +
-            s"query ids are absent from the corpus id column '$idCol'")
-        val beam0 = coarseFrame(vecs, mn, coarseEntryK, coarseEntryIds) match {
+    // corpus identity: files (+ sizes, mtimes) AND plan — a filtered
+    // view over the same files (s55) must not alias the full corpus
+    val key = (idCol, vecCol, AnnIndex.corpusFingerprint(corpus),
+      corpus.semanticHash())
+    val cut = IndexLifecycle.ServingState.withState[NodeFrame, Seq[
+        (Long, Long, Double, Long)]](handle.dir, key)(
+        _.corpus.sameSemantics(corpus))(
+        nodeFrame(corpus, vecCol, idCol, handle)) { nf =>
+      requireHandleMatches(handle, nf.n, nf.mn, idCol, vecCol)
+      val qRows = nf.frame.where(col("id").isin(queryIds: _*))
+        .select(col("id"), col("v")).collect()
+      require(qRows.length == queryIds.distinct.size,
+        s"${queryIds.distinct.size - qRows.length} of ${queryIds.distinct.size} " +
+          s"query ids are absent from the corpus id column '$idCol'")
+      val qvs: Map[Long, Seq[Any]] =
+        qRows.toSeq.groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.get(1)) }
+      val nbrsOf = scala.collection.mutable.HashMap.empty[Long, Seq[Long]]
+      // one scoring action: (qid, dst, cs, nbrs) rows, neighbour lists
+      // kept for the next hop's expansion
+      def collectScored(scored: DataFrame): Seq[BeamRow] =
+        scored.collect().toSeq.map { r =>
+          nbrsOf(r.getLong(1)) = if (r.isNullAt(3)) Nil else r.getSeq[Long](3)
+          (r.getLong(0), r.getLong(1), r.getDouble(2))
+        }.distinct
+      def scoreRound(pairs: Seq[(Long, Long)]): Seq[BeamRow] = {
+        val local = pairs.flatMap { case (q, d) => qvs(q).map(v => Row(q, d, v)) }
+        collectScored(nf.spark.createDataFrame(
+            java.util.Arrays.asList(local: _*), nf.pairSchema)
+          .join(nf.frame.withColumnRenamed("id", "dst"), Seq("dst"))
+          .select(col("qid"), col("dst"),
+            Similarity.cosine(col("v"), col("qv")).as("cs"), col("nbrs")))
+      }
+      var beam: Seq[BeamRow] =
+        coarseFrame(nf.frame, nf.mn, coarseEntryK, coarseEntryIds) match {
           case None =>
-            scorePairs(spark, vecs, qframe, fixedEntries(vecs, mn, queryIds))
+            // entry per query: the min-id vector, or the second-smallest
+            // id when the query is itself the min
+            scoreRound(queryIds.distinct.map(q =>
+              (q, if (q == nf.mn) nf.alt else nf.mn)))
           case Some(coarse) =>
             // hierarchical entry, the s50 selection without the hop-0
-            // audit: argmax over the coarse set, cut driver-side (the
-            // coarse scan streams; the local query frame broadcasts
-            // for free)
-            topByQ(coarse.crossJoin(broadcast(qframe))
+            // audit: argmax over the coarse set, cut driver-side
+            val qLocal = nf.spark.createDataFrame(
+              java.util.Arrays.asList(qRows: _*),
+              StructType(Seq(StructField("qid", LongType),
+                nf.pairSchema("qv"))))
+            topByQ(collectScored(coarse.crossJoin(broadcast(qLocal))
               .where(col("dst") =!= col("qid"))
-              .withColumn("cs", Similarity.cosine(col("v"), col("qv")))
-              .select(col("qid"), col("dst"), col("cs"))
-              .collect().toSeq
-              .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))), 1)
+              .select(col("qid"), col("dst"),
+                Similarity.cosine(col("v"), col("qv")).as("cs"),
+                col("nbrs"))), 1)
         }
-        val beam = walkBeamLocal(spark, vecs, und, qframe, beam0,
-          beamWidth, hops, excludeSelf = true)
-        def round6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-        val cut = topByQ(beam, k).groupBy(_._1).toSeq.sortBy(_._1)
-          .flatMap { case (q, g) =>
-            g.zipWithIndex.map { case ((_, dst, cs), i) =>
-              (q, dst, round6(cs), (i + 1).toLong)
-            }
-          }
-        spark.createDataFrame(cut)
-          .toDF("query_id", "neighbor_id", "cosine", "rank")
-      } finally {
-        und.unpersist()
+      var h = 1
+      while (h <= hops) {
+        val cand = beam.flatMap { case (q, d, _) =>
+          (d +: nbrsOf.getOrElse(d, Nil)).collect { case x if x != q => (q, x) }
+        }.distinct
+        beam = topByQ(scoreRound(cand), beamWidth)
+        h += 1
       }
-    } finally vecs.unpersist()
+      def round6(x: Double): Double = java.math.BigDecimal.valueOf(x)
+        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+      topByQ(beam, k).groupBy(_._1).toSeq.sortBy(_._1)
+        .flatMap { case (q, g) =>
+          g.zipWithIndex.map { case ((_, dst, cs), i) =>
+            (q, dst, round6(cs), (i + 1).toLong)
+          }
+        }
+    }
+    corpus.sparkSession.createDataFrame(cut)
+      .toDF("query_id", "neighbor_id", "cosine", "rank")
+  }
+
+  /** A graph version's serving state: the node frame — each corpus
+    * vector with its undirected neighbour list, (id, v, nbrs) — over
+    * rows it owns (`rows`, persisted outside the CacheManager: see
+    * [[org.apache.spark.sql.graftbridge.PinnedFrame]]), plus the
+    * corpus stats the serve guards need (n, the min id `mn` and the
+    * second-smallest `alt`, the entry when a query IS `mn`). `corpus`
+    * is the plan it was built from, the identity a later request's
+    * corpus must match (`sameSemantics`).
+    */
+  private final case class NodeFrame(frame: DataFrame,
+      rows: org.apache.spark.rdd.RDD[_], corpus: DataFrame,
+      n: Long, mn: Long, alt: Long)
+      extends IndexLifecycle.ServingState.Releasable {
+    def spark: org.apache.spark.sql.SparkSession = frame.sparkSession
+    /** The per-round local relation: (qid, dst, qv), qv typed as v. */
+    val pairSchema: StructType = StructType(Seq(
+      StructField("qid", LongType), StructField("dst", LongType),
+      StructField("qv", frame.schema("v").dataType)))
+    def release(): Unit = rows.unpersist(blocking = false): Unit
+  }
+
+  /** Build a version's [[NodeFrame]]: the corpus (id, v) left-joined to
+    * the undirected adjacency grouped by source (`collect_list(dst)`;
+    * a mutual edge lists its peer twice, which the walk's driver-side
+    * distinct absorbs), pinned and materialized by the stats agg.
+    * Runs in the first request's session; the rows are released on
+    * failure.
+    */
+  private def nodeFrame(corpus: DataFrame, vecCol: String, idCol: String,
+      handle: GraphIndex.Handle): NodeFrame = {
+    val nbrs = undirectedWalk(GraphIndex.edges(corpus.sparkSession, handle))
+      .groupBy(col("src").as("id")).agg(collect_list(col("dst")).as("nbrs"))
+    val (frame, rows) = org.apache.spark.sql.graftbridge.PinnedFrame(
+      graft.ops.ScaleOps.fanOut(corpus)
+        .select(col(idCol).as("id"), col(vecCol).as("v"))
+        .join(nbrs, Seq("id"), "left"),
+      s"graph node frame ${handle.dir}")
+    try {
+      val stats = frame.agg(count(lit(1)), min(col("id"))).head()
+      val n = stats.getLong(0)
+      require(n >= 2, "cannot search a graph over fewer than 2 vectors")
+      val mn = stats.getLong(1)
+      val alt = frame.where(col("id") > lit(mn)).agg(min(col("id"))).head()
+      // null only when every id is mn (duplicate ids): such a query
+      // enters at itself and the walk's self-exclusion drops it
+      NodeFrame(frame, rows, corpus, n, mn,
+        if (alt.isNullAt(0)) mn else alt.getLong(0))
+    } catch {
+      case t: Throwable => rows.unpersist(blocking = false); throw t
+    }
   }
 
   /** GRAPH APPEND WRITE-BACK — the mutation [[graphAppendAudit]]

@@ -44,19 +44,24 @@ object GraphIndex {
   val FormatVersion = 1
 
   /** An opened index: parameters + corpus stats from meta; the edge
-    * table stays on disk until a search reads it.
+    * table stays on disk until a search reads it. `edgesSchema` is
+    * the schema the edge table was written with, captured once at
+    * build or open so a read never runs a footer-inference job.
     */
   final case class Handle(dir: String, graphK: Int, buildRounds: Int,
-      n: Long, mn: Long, idCol: String, vecCol: String) {
+      n: Long, mn: Long, idCol: String, vecCol: String,
+      edgesSchema: StructType) {
     def edgesPath: String = s"$dir/edges"
   }
 
-  /** The directed adjacency as a lazy parquet scan — callers cache it
-    * (or its undirected closure) for the duration of one serving
-    * loop, never longer.
+  /** The directed adjacency as a lazy parquet scan. The eager audit
+    * and mutation walkers cache its undirected closure for one call;
+    * the lean serving read ([[GraphAnn.graphSearchTopK]]) folds it
+    * into the version's cached node frame, built once and released
+    * with the version ([[IndexLifecycle.ServingState]]).
     */
   def edges(spark: SparkSession, h: Handle): DataFrame =
-    spark.read.parquet(h.edgesPath)
+    spark.read.schema(h.edgesSchema).parquet(h.edgesPath)
 
   /** Build the NN-descent graph over `emb` and persist it under
     * `dir`. The edge SET is deterministic (every top-k window orders
@@ -89,12 +94,12 @@ object GraphIndex {
     require(mx - mn + 1L == n,
       s"ring init needs a dense id column: ids span [$mn,$mx] but count is $n")
     val g = GraphAnn.buildRingGraph(vecs, n, mn, graphK, buildRounds)
-    g.select(col("src"), col("dst"))
-      .write.mode("overwrite").parquet(s"$dir/edges")
+    val written = g.select(col("src"), col("dst"))
+    written.write.mode("overwrite").parquet(s"$dir/edges")
     g.unpersist()
     vecs.unpersist()
     writeMeta(spark, dir, graphK, buildRounds, n, mn, idCol, vecCol)
-    Handle(dir, graphK, buildRounds, n, mn, idCol, vecCol)
+    Handle(dir, graphK, buildRounds, n, mn, idCol, vecCol, written.schema)
   }
 
   private def dropMeta(spark: SparkSession, dir: String): Unit = {
@@ -154,15 +159,17 @@ object GraphIndex {
     val spark = edges.sparkSession
     IndexLifecycle.DirGuard.awaitClearForWrite(destDir)
     dropMeta(spark, destDir)
-    edges.select(col("src"), col("dst"))
-      .write.mode("overwrite").parquet(s"$destDir/edges")
+    val written = edges.select(col("src"), col("dst"))
+    written.write.mode("overwrite").parquet(s"$destDir/edges")
     writeMeta(spark, destDir, src.graphK, src.buildRounds, n, mn,
       src.idCol, src.vecCol)
     Handle(destDir, src.graphK, src.buildRounds, n, mn, src.idCol,
-      src.vecCol)
+      src.vecCol, written.schema)
   }
 
-  /** Open a persisted index: one tiny meta read. */
+  /** Open a persisted index: one tiny meta read plus the edge
+    * table's footer schema (the only inference its reads ever pay).
+    */
   def open(spark: SparkSession, dir: String): Handle = {
     val meta = spark.read.parquet(s"$dir/meta").collect() match {
       case Array(r) => r
@@ -173,7 +180,8 @@ object GraphIndex {
     require(version == FormatVersion,
       s"graph index format $version unsupported (expected $FormatVersion)")
     Handle(dir, meta.getInt(1), meta.getInt(2), meta.getLong(3),
-      meta.getLong(4), meta.getString(5), meta.getString(6))
+      meta.getLong(4), meta.getString(5), meta.getString(6),
+      spark.read.parquet(s"$dir/edges").schema)
   }
 
   /** [[open]] returning None ONLY for the absent-index case (no meta
@@ -231,7 +239,10 @@ object GraphIndex {
   // discipline applies: reads run under the dir's reader count,
   // DELETE condemns with deferred file deletion, a param-change
   // re-POST condemns the superseded dir, and write-back swaps the
-  // registry pointer to the new version's dir.
+  // registry pointer to the new version's dir. Every one of those
+  // moves — and a plain [[drop]] — also releases the version's
+  // cached node frames (IndexLifecycle.ServingState), once the
+  // searches using them finish.
 
   private val reg = new IndexLifecycle.IndexRegistry[Handle](_.dir)
 

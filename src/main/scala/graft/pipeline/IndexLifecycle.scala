@@ -60,6 +60,14 @@ object IndexLifecycle {
       try body finally release(dir)
     }
 
+    /** True once `dir` is condemned, deleting or deleted — a version
+      * that admits no new readers, so nothing built over it is worth
+      * keeping past the request that built it.
+      */
+    def isDead(dir: String): Boolean = states.synchronized {
+      states.get(dir).exists(st => st.condemned || st.deleting || st.deleted)
+    }
+
     private def release(dir: String): Unit = {
       val deleteNow = states.synchronized {
         states.get(dir) match {
@@ -89,6 +97,9 @@ object IndexLifecycle {
           if (st.readers == 0) { st.deleting = true; true } else false
         }
       }
+      // after the state change: a serving state built concurrently
+      // either sees the dir dead at acquire or is retired here
+      ServingState.release(dir)
       if (deleteNow) doDelete(dir)
     }
 
@@ -115,22 +126,128 @@ object IndexLifecycle {
       * completed deletion's tombstone is reclaimed here: the writer
       * owns the path again.
       */
-    def awaitClearForWrite(dir: String): Unit = states.synchronized {
-      val deadlineNs = System.nanoTime() + 120L * 1000 * 1000 * 1000
-      var done = false
-      while (!done) {
-        states.get(dir) match {
-          case Some(st) if st.deleted =>
-            states.remove(dir): Unit
-            done = true
-          case Some(st) if st.condemned || st.deleting =>
-            val remMs = (deadlineNs - System.nanoTime()) / 1000000
-            if (remMs <= 0) throw new IllegalStateException(
-              s"timed out waiting for pending delete of index dir $dir")
-            states.wait(remMs)
-          case _ => done = true
+    def awaitClearForWrite(dir: String): Unit = {
+      states.synchronized {
+        val deadlineNs = System.nanoTime() + 120L * 1000 * 1000 * 1000
+        var done = false
+        while (!done) {
+          states.get(dir) match {
+            case Some(st) if st.deleted =>
+              states.remove(dir): Unit
+              done = true
+            case Some(st) if st.condemned || st.deleting =>
+              val remMs = (deadlineNs - System.nanoTime()) / 1000000
+              if (remMs <= 0) throw new IllegalStateException(
+                s"timed out waiting for pending delete of index dir $dir")
+              states.wait(remMs)
+            case _ => done = true
+          }
         }
       }
+      // the writer supersedes whatever version the dir held
+      ServingState.release(dir)
+    }
+  }
+
+  /** Per-VERSION serving state: structures a search builds once over
+    * an (index dir, corpus) pair and reuses across requests — the
+    * graph family's cached node frame. A version's state is released
+    * as soon as the version stops being servable, at the points the
+    * lifecycle already owns: [[IndexRegistry.drop]], every
+    * [[DirGuard.condemn]] (DELETE, a superseding re-POST, a
+    * write-back swap) and [[DirGuard.awaitClearForWrite]] (a rebuild
+    * into the same dir).
+    *
+    * Each slot counts the requests using it. A release RETIRES the
+    * slot: it leaves the map at once, so the next request builds a
+    * fresh one, but its value is released only when its last user
+    * leaves — never under a running request, whose remaining rounds
+    * would otherwise recompute the corpus-sized state from its
+    * lineage. Concurrent first requests build once: the build
+    * runs under the slot's build lock, and the building request counts
+    * as a user, so a release racing a build retires a slot whose value
+    * that request's own exit then releases.
+    */
+  object ServingState {
+    trait Releasable { def release(): Unit }
+
+    private final class Slot {
+      val buildLock = new Object
+      @volatile var value: Releasable = null
+      var users = 0         // guarded by the slot's monitor
+      var retired = false   // ditto; a retired slot is out of the map
+    }
+    private val slots =
+      new java.util.concurrent.ConcurrentHashMap[(String, Any), Slot]()
+
+    /** Run `body` against the state for (`dir`, `key`), building it
+      * with `build` on first use. `key` may be a hash: `matches`
+      * confirms a hit, and a state that fails it (a collision) is
+      * served from a private slot released when `body` returns.
+      */
+    def withState[V <: Releasable, T](dir: String, key: Any)(
+        matches: V => Boolean)(build: => V)(body: V => T): T = {
+      val slot = acquire(dir, key)
+      try {
+        val v = valueOf[V](slot, build)
+        if (matches(v)) body(v)
+        else {
+          val own = new Slot
+          own.users = 1
+          own.retired = true
+          try body(valueOf[V](own, build)) finally leave(own)
+        }
+      } finally leave(slot)
+    }
+
+    /** Retire every slot of `dir`. Idempotent. */
+    def release(dir: String): Unit =
+      slots.entrySet().removeIf { e =>
+        val hit = e.getKey._1 == dir
+        if (hit) retire(e.getValue)
+        hit
+      }: Unit
+
+    @scala.annotation.tailrec
+    private def acquire(dir: String, key: Any): Slot = {
+      val s = slots.computeIfAbsent((dir, key), _ => new Slot)
+      val entered = s.synchronized {
+        if (s.retired) false else { s.users += 1; true }
+      }
+      if (!entered) acquire(dir, key) // released meanwhile: start over
+      else {
+        // a dead version's in-flight reader may still search it, but
+        // must not leave a state behind that no release will reach
+        if (DirGuard.isDead(dir) && slots.remove((dir, key), s)) retire(s)
+        s
+      }
+    }
+
+    private def valueOf[V](s: Slot, build: => V): V =
+      s.buildLock.synchronized {
+        if (s.value == null) s.value = build.asInstanceOf[Releasable]
+        s.value.asInstanceOf[V]
+      }
+
+    private def retire(s: Slot): Unit = {
+      val idle = s.synchronized {
+        s.retired = true
+        s.users == 0
+      }
+      if (idle) drain(s)
+    }
+
+    private def leave(s: Slot): Unit = {
+      val last = s.synchronized {
+        s.users -= 1
+        s.users == 0 && s.retired
+      }
+      if (last) drain(s)
+    }
+
+    private def drain(s: Slot): Unit = {
+      val v = s.synchronized { val v = s.value; s.value = null; v }
+      if (v != null) v.release()
     }
   }
 
@@ -175,7 +292,11 @@ object IndexLifecycle {
       registry.put(name, handle): Unit
     }
     def get(name: String): Option[H] = Option(registry.get(name))
-    def drop(name: String): Boolean = registry.remove(name) != null
+    /** Unregister `name`; its files stay, its serving state goes. */
+    def drop(name: String): Boolean = Option(registry.remove(name)) match {
+      case Some(h) => ServingState.release(dirOf(h)); true
+      case None => false
+    }
     def list(): Seq[String] = {
       import scala.jdk.CollectionConverters._
       registry.keys.asScala.toSeq.sorted

@@ -47,12 +47,25 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
   /** Upload size cap, 20 MB default (reference `settings.rs:213`). */
   @volatile var uploadLimitBytes: Int = 20 * 1024 * 1024
   private val server = JdkHttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-  server.setExecutor(Executors.newFixedThreadPool(8))
+  private val pool = Executors.newFixedThreadPool(8, (r: Runnable) =>
+    new Thread(r, s"graft-http-${GraftServer.threadSeq.incrementAndGet()}"))
+  server.setExecutor(pool)
 
   def boundPort: Int = server.getAddress.getPort
 
   def start(): Unit = server.start()
-  def stop(): Unit = { server.stop(0); sessions.shutdown() }
+
+  /** Stop accepting, then retire the handler pool: in-flight handlers
+    * get a short grace period before they are interrupted, so a
+    * stopped server leaves no `graft-http-*` thread behind.
+    */
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+    if (!pool.awaitTermination(5, java.util.concurrent.TimeUnit.SECONDS))
+      pool.shutdownNow(): Unit
+    sessions.shutdown()
+  }
 
   // --------------------------------------------------------------
 
@@ -875,6 +888,9 @@ object GraftServer {
     * disk footprint. 32 named indexes is far past any serving need.
     */
   val MaxIndexesPerSession = 32
+
+  /** Numbers handler threads (`graft-http-N`) across servers. */
+  private val threadSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 }
 
 object GraftServerMain {

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 
 /** End-to-end REST tests: the full reference flow of SURVEY §3.1/3.2
   * driven through real HTTP.
@@ -32,6 +33,27 @@ class HttpServerSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def delete(path: String) =
     client.send(HttpRequest.newBuilder(URI.create(s"$base$path")).DELETE().build(),
       HttpResponse.BodyHandlers.ofString())
+
+  test("a stopped server leaves no graft-http thread alive") {
+    def httpThreads: Set[Thread] =
+      Thread.getAllStackTraces.keySet.asScala.toSet
+        .filter(t => t.isAlive && t.getName.startsWith("graft-http-"))
+    val earlier = httpThreads
+    val own = new GraftServer(SparkFixture.spark)
+    own.start()
+    val ownBase = s"http://127.0.0.1:${own.boundPort}"
+    (1 to 4).foreach { _ =>
+      assert(client.send(HttpRequest.newBuilder(URI.create(s"$ownBase/healthz"))
+        .GET().build(), HttpResponse.BodyHandlers.ofString()).statusCode() == 204)
+    }
+    val ours = httpThreads -- earlier
+    assert(ours.nonEmpty, "handler threads must be named graft-http-N")
+    own.stop()
+    // a retired worker finishes exiting just after the pool terminates
+    ours.foreach(_.join(5000))
+    val alive = ours.filter(_.isAlive)
+    assert(alive.isEmpty, s"stop() left ${alive.map(_.getName)} running")
+  }
 
   test("healthz is 204") {
     assert(get("/healthz").statusCode() == 204)

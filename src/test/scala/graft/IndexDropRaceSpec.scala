@@ -187,7 +187,8 @@ class IndexDropRaceSpec extends AnyFunSuite {
     val stub = graft.pipeline.AnnIndex.Handle(
       dir = "unused", m = 1, ksub = 1, dim = 1, numCells = 1,
       cellsRequested = 1, idCol = "id", vecCol = "v",
-      codebooks = Array.empty, centroids = Seq.empty)
+      codebooks = Array.empty, centroids = Seq.empty,
+      codesSchema = new org.apache.spark.sql.types.StructType())
     val pool = Executors.newFixedThreadPool(16)
     val admitted = new AtomicInteger
     val refused = new AtomicInteger

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.{GraphAnn, GraphIndex, Similarity}
+import graft.pipeline.{GraphAnn, GraphIndex, IndexLifecycle, Similarity}
 import org.apache.spark.sql.DataFrame
 
 /** Round-21 operators: graph-index WRITE-BACK (append s54 / repair
@@ -251,7 +251,7 @@ class Round21Spec extends AnyFunSuite {
     }
   }
 
-  test("s56: lean serve releases every cache; query cap and absent ids are loud") {
+  test("s56: lean serve pins only the version's node frame; query cap and absent ids are loud") {
     val emb = embDf(n = 40, seed = 37)
     val h = GraphIndex.buildIfAbsent(emb, "embedding", "vec_id",
       s"${tmpDir("s2")}/idx", graphK = 4, buildRounds = 1)
@@ -270,7 +270,12 @@ class Round21Spec extends AnyFunSuite {
       GraphAnn.graphSearchTopK(emb, "embedding", "vec_id", h,
         queryIds = (0L until 257L).toSeq, k = 2, beamWidth = 4, hops = 1)
     }
+    // both flavors and the failed calls share the one cached node
+    // frame of this (version, corpus); releasing the version drops it
     val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+    val held = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(held.size == 1, s"lean serve must hold one node frame, got $held")
+    IndexLifecycle.ServingState.release(h.dir)
     var leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     while (leaked.nonEmpty && System.nanoTime() < deadline) {
       Thread.sleep(100)
