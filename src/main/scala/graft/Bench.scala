@@ -29,7 +29,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
     // optional args: restrict to the named queries (iterating on one
     // operator locally); the driver invokes with no args = run all
@@ -45,13 +45,8 @@ object Bench {
         }
         SparkEntry.queries.view.filterKeys(args.toSet).toMap
       }
-    val spark = graft.EngineConf.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = EngineConf.local(cpus)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val ordered = selected.toSeq.sortBy(_._1)
@@ -135,11 +130,13 @@ object Bench {
     println(line)
     // the stdout tail truncates mid-list at 175 queries (r9 lost every
     // d/m/q number: BENCH_r09 "parsed": null) — the full map must also
-    // land somewhere durable. Best-effort: a bench must never fail on
-    // a read-only working directory.
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => () }
+    // land somewhere durable. Full-suite runs only: a named-subset run
+    // must not overwrite the full-suite record. Best-effort: a bench
+    // must never fail on a read-only working directory.
+    if (args.isEmpty)
+      try java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
+        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      catch { case _: Throwable => () }
     spark.stop()
   }
 }

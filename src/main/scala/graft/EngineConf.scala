@@ -2,48 +2,34 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Engine-wide performance knobs shared by every session builder
-  * (Bench, Verify, the REST server, the dev harnesses) so a
-  * measurement taken in one harness describes the others.
+/** Engine-wide session settings shared by every session builder
+  * (Bench, Verify, the REST server, the dev tools) so a measurement
+  * taken in one harness describes the others.
   *
-  * Round-15 measurement (optimization guide §1: measure first, §1.2:
-  * config is the LAST lever): byte-based AQE partition coalescing
-  * (`parallelismFirst=false`, advisory 64m, cached-plan AQE on) cut
-  * task counts 3-4x on the iterative graph operators (s47 2440→832
-  * tasks) but made min-of-5 walls WORSE or flat across the suite
-  * (d38 2.69→6.36 s, d39 4.28→8.16 s, s47 3.91→4.90 s, m27
-  * 2.74→2.91 s): at local bench scale the wall is per-JOB scheduling
-  * overhead, not per-task dispatch, and collapsing small exchanges to
-  * one partition serializes the CPU inside each stage.
-  *
-  * Round-16 re-measurement at 10× (the r15 verdict's ask — ScaleSmoke
-  * 10, knobs stock vs parallelismFirst=false + 256m advisory +
-  * cached-plan AQE): the knobs lose HARDER at scale — d02 16.9→251 s,
-  * d22 20.4→231 s, d39 32→253 s, d38 25→81 s, s47 7.3→12.2 s; only
-  * IO-light rollups stay neutral (d14 3.7→3.6 s, q65 0.18→0.20 s).
-  * Cause: the suite's heavy exchanges feed CPU-dense pair-expansion
-  * stages, and §2.2's 100 MB–1 GB byte target sizes partitions for
-  * shuffle IO, not for CPU per byte — coalescing to the advisory
-  * serializes the quadratic work. The defaults below therefore stay
-  * STOCK at BOTH measured scales — the knobs remain env-switchable
-  * for IO-bound deployments and to keep both A/Bs reproducible.
-  *
-  *   SPARK_GRAFT_COALESCE_PARALLELISM_FIRST — "false" activates
-  *     byte-based AQE partition sizing (Spark default "true").
-  *   SPARK_GRAFT_ADVISORY_PARTITION_BYTES — AQE's target post-shuffle
-  *     partition size (Spark default 64m; guide §9 suggests 256m for
-  *     batch ETL at scale).
-  *   SPARK_GRAFT_CACHED_PLAN_AQE — "true" lets AQE re-plan inside
-  *     cached plans (Spark default "false"); required for the two
-  *     knobs above to reach the iterative operators, which cache
-  *     every loop frame.
+  * [[tuned]] pins AQE's partition coalescing at Spark's stock values.
+  * Byte-based coalescing (`parallelismFirst=false`, a larger advisory
+  * size, cached-plan AQE on) was A/B'd at both measured scales and
+  * lost at both: at sf0.1 (round 15) it cut s47's tasks 2440→832 but
+  * made walls worse or flat (d38 2.69→6.36 s, d39 4.28→8.16 s, s47
+  * 3.91→4.90 s); at 10× (round 16, ScaleSmoke) it lost harder (d02
+  * 16.9→251 s, d22 20.4→231 s, d39 32→253 s, s47 7.3→12.2 s). The
+  * suite's heavy exchanges feed CPU-dense pair-expansion stages, and
+  * coalescing to a byte target serializes that quadratic work
+  * (OPTIMIZATION_r16.md §7 has the 10× table).
   */
 object EngineConf {
   def tuned(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-      sys.env.getOrElse("SPARK_GRAFT_COALESCE_PARALLELISM_FIRST", "true"))
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"))
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-      sys.env.getOrElse("SPARK_GRAFT_CACHED_PLAN_AQE", "false"))
+    .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
+    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
+
+  /** A [[tuned]] local-mode builder: `local[cpus]` with one shuffle
+    * partition per core, UTC session time, AQE on, no UI.
+    */
+  def local(cpus: Int): SparkSession.Builder = tuned(SparkSession.builder())
+    .master(s"local[$cpus]")
+    .config("spark.sql.shuffle.partitions", cpus.toString)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.adaptive.enabled", "true")
+    .config("spark.ui.enabled", "false")
 }

@@ -107,10 +107,6 @@ object ScaleOps {
     // already fanned out (Repartition present → skip) or comes out of
     // a shuffle already at cluster width (groupBy/join output → a
     // further repartition would add nothing).
-    // Dev-only A/B knob (graft.tools.DriftProfile __range_ab): lets a
-    // profile run the EXACT declared query with fanOut as a no-op, so
-    // the repartition's cost/benefit is measured, not assumed.
-    if (sys.props.get("graft.fanout.disable").contains("true")) return df
     import org.apache.spark.sql.catalyst.plans.logical._
     import org.apache.spark.sql.classic.{Dataset => CDS}
     val logical = df.asInstanceOf[CDS[org.apache.spark.sql.Row]].queryExecution.analyzed

@@ -1258,7 +1258,7 @@ object Dedup {
     // pair that can pass and returns −1 (→ filtered, same as the full
     // DP would) for the rest. bound = ⌊(1−τ)·maxlen⌋ + 1 strictly
     // over-covers the double comparison below, so banded output ==
-    // full-DP output. Measured (DriftProfile __lev_ab, 200k 500-char
+    // full-DP output. Measured (round-12 A/B, 200k 500-char
     // pairs): full DP 14.2-16.1 s, thresholded 8.1-8.7 s — Spark's
     // banded path engages for a per-row threshold column, ~1.9×; the
     // per-pair DP that remains is the verifier's inherent cost (why

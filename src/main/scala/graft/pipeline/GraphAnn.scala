@@ -104,11 +104,6 @@ object GraphAnn {
       org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]].rdd,
       ds.schema)
 
-  /** Undirected closure of a directed adjacency. */
-  private[pipeline] def undirected(g: DataFrame): DataFrame =
-    g.unionByName(g.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-
   /** Undirected VIEW of a directed adjacency for the serve-time beam
     * walks: g ∪ reverse(g) WITHOUT the dedup exchange. A mutual edge
     * (both (a,b) and (b,a) in g) appears twice, which only duplicates
@@ -116,7 +111,7 @@ object GraphAnn {
     * collected rows driver-side (identical deterministic triples) —
     * while the distinct() this view drops was a corpus-sized (2·E
     * row) shuffle paid once per serve call. Walk-only by contract:
-    * any consumer that COUNTS edges must keep [[undirected]].
+    * a consumer that COUNTS edges must add the `distinct()` back.
     */
   private[pipeline] def undirectedWalk(g: DataFrame): DataFrame =
     g.unionByName(g.select(col("dst").as("src"), col("src").as("dst")))
@@ -445,37 +440,28 @@ object GraphAnn {
   def graphBeamSearchLoaded(emb: DataFrame, vecCol: String, idCol: String,
       handle: GraphIndex.Handle, queryIds: Seq[Long], k: Int,
       beamWidth: Int, hops: Int,
-      coarseEntryK: Option[Int] = None,
-      coarseEntryIds: Option[Seq[Long]] = None): DataFrame = {
-    require(coarseEntryK.isEmpty || coarseEntryIds.isEmpty,
-      "pass coarseEntryK or coarseEntryIds, not both")
+      coarseEntryK: Option[Int] = None): DataFrame = {
     val (vecs, n, mn, _) = servingVecs(emb, vecCol, idCol)
     try {
       requireHandleMatches(handle, n, mn, idCol, vecCol)
       beamServe(emb, vecCol, idCol, vecs,
         undirectedWalk(GraphIndex.edges(emb.sparkSession, handle)), mn,
         queryIds, k, beamWidth, hops,
-        coarseFrame(vecs, mn, coarseEntryK, coarseEntryIds))
+        coarseFrame(vecs, mn, coarseEntryK))
     } finally vecs.unpersist()
   }
 
   /** The hierarchical-entry coarse candidate set: the first `ck`
-    * vectors by id (the seed discipline — s50's declared shape), or
-    * an EXPLICIT id set (`coarseEntryIds`) for callers whose coarse
-    * layer is computed offline — e.g. k-means medoids (the round-21
-    * `__gentry_ab` medoid arm). Returns `vecs`' rows with id renamed
-    * dst: (dst, v), or (dst, v, nbrs) off a node frame.
+    * vectors by id (the seed discipline — s50's declared shape).
+    * Returns `vecs`' rows with id renamed dst: (dst, v), or
+    * (dst, v, nbrs) off a node frame.
     */
   private def coarseFrame(vecs: DataFrame, mn: Long,
-      coarseEntryK: Option[Int],
-      coarseEntryIds: Option[Seq[Long]]): Option[DataFrame] =
+      coarseEntryK: Option[Int]): Option[DataFrame] =
     coarseEntryK.map { ck =>
       require(ck >= 1, s"coarseEntryK must be >= 1, got $ck")
       vecs.where(col("id") < lit(mn + ck.toLong)).withColumnRenamed("id", "dst")
-    }.orElse(coarseEntryIds.map { ids =>
-      require(ids.nonEmpty, "coarseEntryIds must be non-empty")
-      vecs.where(col("id").isin(ids: _*)).withColumnRenamed("id", "dst")
-    })
+    }
 
   /** Shared serving prep: fanned-out (id, v) cache + corpus stats.
     * No density requirement here (round 21): serving a LOADED index
@@ -544,8 +530,6 @@ object GraphAnn {
     rows.groupBy(_._1).toSeq.sortBy(_._1)
       .flatMap { case (_, g) => g.sorted(ord).take(width) }
   }
-
-  private val hopPlanSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Daemon pool for [[inParallel]] — cached (the eager operators
     * fork at most a handful of legs per call, and the REST door's
@@ -620,11 +604,6 @@ object GraphAnn {
     * deduped candidate set keeps the explicit broadcast hint onto the
     * vector scan (an inner join's build side — legal and intended;
     * the corpus-sized cached frames never move).
-    *
-    * SPARK_GRAFT_HOP_PLAN_DIR (dev evidence knob): when set, each
-    * hop's formatted plan is written there — the per-hop join
-    * evidence a committed `.explain` of the eager operator's
-    * LocalRelation result cannot show.
     */
   private def hopScored(spark: org.apache.spark.sql.SparkSession,
       vecs: DataFrame, und: DataFrame, qframe: DataFrame,
@@ -647,14 +626,6 @@ object GraphAnn {
       .join(broadcast(qframe), Seq("qid"))
       .withColumn("cs", Similarity.cosine(col("v"), col("qv")))
       .select(col("qid"), col("dst"), col("cs"))
-    sys.env.get("SPARK_GRAFT_HOP_PLAN_DIR").foreach { dir =>
-      val p = java.nio.file.Paths.get(dir,
-        s"hop_${hopPlanSeq.incrementAndGet()}.txt")
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, scored.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
     scored.collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .distinct
@@ -1565,10 +1536,7 @@ object GraphAnn {
   def graphSearchTopK(corpus: DataFrame, vecCol: String, idCol: String,
       handle: GraphIndex.Handle, queryIds: Seq[Long], k: Int,
       beamWidth: Int, hops: Int,
-      coarseEntryK: Option[Int] = None,
-      coarseEntryIds: Option[Seq[Long]] = None): DataFrame = {
-    require(coarseEntryK.isEmpty || coarseEntryIds.isEmpty,
-      "pass coarseEntryK or coarseEntryIds, not both")
+      coarseEntryK: Option[Int] = None): DataFrame = {
     require(k > 0 && beamWidth >= k,
       s"need beamWidth >= k > 0, got k=$k beamWidth=$beamWidth")
     require(hops >= 1, s"bad hops=$hops")
@@ -1607,7 +1575,7 @@ object GraphAnn {
             Similarity.cosine(col("v"), col("qv")).as("cs"), col("nbrs")))
       }
       var beam: Seq[BeamRow] =
-        coarseFrame(nf.frame, nf.mn, coarseEntryK, coarseEntryIds) match {
+        coarseFrame(nf.frame, nf.mn, coarseEntryK) match {
           case None =>
             // entry per query: the min-id vector, or the second-smallest
             // id when the query is itself the min

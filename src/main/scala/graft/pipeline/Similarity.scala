@@ -95,7 +95,7 @@ object Similarity {
     * @return (rank, vec_id, qsim, mmr) in selection order
     */
   // Fold cadence, set by measurement (round-10 A/B, sf0.1, idle JVM,
-  // s21 shape k=10: foldEvery=4 → 1.24 s median, 8 → 0.98 s,
+  // s21 shape k=10: a fold every 4 picks → 1.24 s median, 8 → 0.98 s,
   // 16/no-fold → 0.92 s with min 0.76 s): each fold is a count() +
   // cache swap whose fixed cost exceeds the inline-penalty expression
   // growth it removes until the pending chain is ~16 deep. 16 keeps
@@ -104,11 +104,9 @@ object Similarity {
   val MmrFoldEvery = 16
 
   def mmrTopK(emb: DataFrame, vecCol: String, idCol: String,
-      queryId: Long, k: Int, lambda: Double,
-      foldEvery: Int = MmrFoldEvery): DataFrame = {
+      queryId: Long, k: Int, lambda: Double): DataFrame = {
     require(k > 0, "k must be positive")
     require(lambda >= 0.0 && lambda <= 1.0, "lambda must be in [0,1]")
-    require(foldEvery > 0, "foldEvery must be positive")
     val spark = emb.sparkSession
     val qVec = emb.where(col(idCol) === lit(queryId))
       .select(transform(col(vecCol), _.cast("double")).as("q"))
@@ -158,7 +156,7 @@ object Similarity {
               r.getDouble(2), r.getDouble(3))
             sel += picked
             pending += ((picked._1, picked._2))
-            if (pending.size >= foldEvery && sel.size < k) {
+            if (pending.size >= MmrFoldEvery && sel.size < k) {
               val folded = penaltyCols match {
                 case Seq(one) => one
                 case many => greatest(many: _*)

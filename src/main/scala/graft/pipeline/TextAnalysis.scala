@@ -1640,7 +1640,7 @@ object TextAnalysis {
     // HOF chain below ([[mlmMaskComposable]]) evaluated the per-token
     // md5 decision and both fingerprint rebuilds INTERPRETED per
     // element and profiled ~2.3 s at sf0.1; the kernel streams all
-    // three digests in one token scan (DriftProfile A/B in PLANS.md).
+    // three digests in one token scan (the A/B is recorded in PLANS.md).
     // Round12Spec pins the two spellings bit-identical.
     val norm = trim(regexp_replace(lower(col(textCol)), "\\s+", " "))
     // id hashed in STRING form — agrees with the composable chain for

@@ -896,14 +896,9 @@ object GraftServer {
 object GraftServerMain {
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(4000)
-    val spark = graft.EngineConf.tuned(SparkSession.builder())
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.EngineConf.local(cpus)
       .appName("graft-server")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     graft.sqlcompat.CompatFunctions.registerAll(spark)
     val server = new GraftServer(spark, port)

@@ -350,10 +350,13 @@ class Round8Spec extends AnyFunSuite {
   test("mmr fuzz: 10 random corpora match an in-JVM greedy reference") {
     import spark.implicits._
     val rnd = new scala.util.Random(0x5eed8006L)
-    for (round <- 0 until 10) {
-      val n = 12 + rnd.nextInt(20)
+    for (round <- 0 until 12) {
+      // the last two rounds draw k > MmrFoldEvery, so the chunked
+      // max_sim fold is pinned against the reference too
+      val fold = round >= 10
+      val n = if (fold) 40 + rnd.nextInt(20) else 12 + rnd.nextInt(20)
       val dim = 3 + rnd.nextInt(5)
-      val k = 3 + rnd.nextInt(4)
+      val k = if (fold) 17 + rnd.nextInt(8) else 3 + rnd.nextInt(4)
       val lam = 0.3 + rnd.nextDouble() * 0.6
       val vecs = Array.tabulate(n)(i =>
         (i.toLong, Array.fill(dim)(rnd.nextGaussian().toFloat)))
