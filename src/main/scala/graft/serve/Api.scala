@@ -12,7 +12,10 @@ import scala.jdk.CollectionConverters._
   */
 object Api {
 
-  private val mapper = new ObjectMapper()
+  /** The one Jackson mapper of the serving layer (thread-safe once
+    * configured, and never reconfigured).
+    */
+  private[serve] val mapper = new ObjectMapper()
 
   final case class DataSourceReq(
       format: String,          // csv | json | ndJson | parquet | avro

@@ -44,6 +44,8 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
   val sessions = new SessionManager(root)
   /** Prometheus-format operational metrics (§2.A27). */
   val metrics = new Metrics
+  /** Results of repeated session SQL, shared by every session. */
+  val resultCache = new ResultCache
   /** Upload size cap, 20 MB default (reference `settings.rs:213`). */
   @volatile var uploadLimitBytes: Int = 20 * 1024 * 1024
   private val server = JdkHttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
@@ -65,6 +67,7 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
     if (!pool.awaitTermination(5, java.util.concurrent.TimeUnit.SECONDS))
       pool.shutdownNow(): Unit
     sessions.shutdown()
+    resultCache.clear()
   }
 
   // --------------------------------------------------------------
@@ -79,7 +82,7 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
   })
 
   server.createContext("/metrics", (ex: HttpExchange) => safely(ex) {
-    val body = metrics.render(sessions.list.size)
+    val body = metrics.render(sessions.list.size, resultCache)
       .getBytes(StandardCharsets.UTF_8)
     ex.getResponseHeaders.set("Content-Type", "text/plain; version=0.0.4")
     ex.sendResponseHeaders(200, body.length)
@@ -148,7 +151,7 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
             if (contentType.startsWith("application/sql"))
               (body, None, Seq.empty[Api.PostProcessorReq])
             else {
-              val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+              val n = Api.mapper.readTree(body)
               val qNode = Option(n.get("query"))
               val s = Option(n.get("sql")).map(_.asText())
                 .orElse(qNode.flatMap(q =>
@@ -162,7 +165,10 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
                 Api.parsePostProcessors(n)
               (s, Option(n.get("response")).flatMap(r => Option(r.get("format")).map(_.asText())), pp)
             }
-          respondData(ex, Processors.applyAll(sessions.sql(h, sql), post), fmt)
+          val df = Processors.applyAll(sessions.sql(h, sql), post)
+          val format = negotiate(ex, fmt)
+          respondStream(ex, format)(out =>
+            resultCache.serve(df)(ResponseEncoders.encode(_, format, out)))
         }
       case ("POST", Array(id, "datasource", "upload")) =>
         withSession(ex, id) { h =>
@@ -309,8 +315,7 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
       // IndexLifecycle reader/condemn discipline.)
       case ("POST", Array(id, "index")) =>
         withSession(ex, id) { h =>
-          val n = new com.fasterxml.jackson.databind.ObjectMapper()
-            .readTree(readBody(ex))
+          val n = Api.mapper.readTree(readBody(ex))
           def txt(f: String) = Option(n.get(f)).map(_.asText())
           def int(f: String, d: Int) = Option(n.get(f)).map(_.asInt()).getOrElse(d)
           val name = safeIdent(txt("name").getOrElse(
@@ -430,8 +435,7 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
           graft.pipeline.AnnIndex.get(s"${h.id}/$name") match {
             case None => graphAppend(ex, h, name)
             case Some(hd) =>
-              val n = new com.fasterxml.jackson.databind.ObjectMapper()
-                .readTree(readBody(ex))
+              val n = Api.mapper.readTree(readBody(ex))
               val table = Option(n.get("table")).map(_.asText()).getOrElse(
                 throw new IllegalArgumentException("append.table required"))
               // reader-guarded: a concurrent DROP defers file deletion
@@ -453,8 +457,7 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
           graft.pipeline.AnnIndex.get(s"${h.id}/$name") match {
             case None => graphSearch(ex, h, name)
             case Some(hd) =>
-              val n = new com.fasterxml.jackson.databind.ObjectMapper()
-                .readTree(readBody(ex))
+              val n = Api.mapper.readTree(readBody(ex))
               val k = Option(n.get("k")).map(_.asInt()).getOrElse(10)
               val nprobe = Option(n.get("nprobe")).map(_.asInt())
                 .getOrElse(hd.numCells)
@@ -500,7 +503,7 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
     * wrapper, or a single object (shared by the add and save routes).
     */
   private def parseDataSourceDefs(body: String): Seq[Api.DataSourceReq] = {
-    val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+    val n = Api.mapper.readTree(body)
     val defs =
       if (n.isArray) n.elements().asScala.toSeq
       else Option(n.get("dataSources")).filter(_.isArray)
@@ -635,18 +638,28 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
       case None    => respondJson(ex, 404, err(s"no such session: $id"))
     }
 
+  private def negotiate(ex: HttpExchange, bodyFormat: Option[String]): ResponseEncoders.Format =
+    ResponseEncoders.negotiate(bodyFormat, Option(ex.getRequestHeaders.getFirst("Accept")))
+
+  private def respondData(ex: HttpExchange, df: DataFrame, bodyFormat: Option[String]): Unit = {
+    val fmt = negotiate(ex, bodyFormat)
+    respondStream(ex, fmt)(ResponseEncoders.encode(df, fmt, _))
+  }
+
   /** Streamed delivery (reference A15): chunked transfer, the
     * encoder pulls the result incrementally (`toLocalIterator` /
     * partition-at-a-time Arrow batches) — memory stays bounded by a
-    * partition, not the result set.
+    * partition, not the result set. The terminating chunk is sent
+    * only after `write` returns, so whatever `write` does after its
+    * last byte (the result cache admitting an entry) happens before
+    * the client sees the end of the response.
     */
-  private def respondData(ex: HttpExchange, df: DataFrame, bodyFormat: Option[String]): Unit = {
-    val fmt = ResponseEncoders.negotiate(bodyFormat,
-      Option(ex.getRequestHeaders.getFirst("Accept")))
+  private def respondStream(ex: HttpExchange, fmt: ResponseEncoders.Format)
+      (write: java.io.OutputStream => Unit): Unit = {
     ex.getResponseHeaders.set("Content-Type", fmt.contentType)
     ex.sendResponseHeaders(200, 0) // 0 = chunked
     val out = ex.getResponseBody
-    try { ResponseEncoders.encode(df, fmt, out); out.close() }
+    try { write(out); out.close() }
     catch { case e: Throwable =>
       // headers are committed: abort the exchange WITHOUT the clean
       // zero-chunk terminator so clients see a truncated transfer,
@@ -707,8 +720,7 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
     graft.pipeline.GraphIndex.get(s"${h.id}/$name") match {
       case None => respondJson(ex, 404, err(s"no such index: $name"))
       case Some(hd) =>
-        val n = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(readBody(ex))
+        val n = Api.mapper.readTree(readBody(ex))
         val table = Option(n.get("table")).map(_.asText()).getOrElse(
           throw new IllegalArgumentException("search.table required"))
         val qn = Option(n.get("queryIds")).filter(_.isArray).getOrElse(
@@ -758,8 +770,7 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
     if (graft.pipeline.GraphIndex.get(regKey).isEmpty)
       respondJson(ex, 404, err(s"no such index: $name"))
     else {
-      val n = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(readBody(ex))
+      val n = Api.mapper.readTree(readBody(ex))
       val batchTable = Option(n.get("table")).map(_.asText()).getOrElse(
         throw new IllegalArgumentException("append.table required"))
       val corpusTable = Option(n.get("corpusTable")).map(_.asText())
@@ -801,8 +812,7 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
     else if (graft.pipeline.GraphIndex.get(regKey).isEmpty)
       respondJson(ex, 404, err(s"no such index: $name"))
     else {
-      val n = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(readBody(ex))
+      val n = Api.mapper.readTree(readBody(ex))
       val deletedTable = Option(n.get("deletedTable")).map(_.asText())
         .getOrElse(throw new IllegalArgumentException(
           "repair.deletedTable required"))

@@ -30,7 +30,7 @@ final class Metrics {
     adder(requestNanos, route).add(nanos)
   }
 
-  def render(activeSessions: Int): String = {
+  def render(activeSessions: Int, cache: ResultCache): String = {
     val sb = new StringBuilder
     def gauge(name: String, help: String, v: Double): Unit =
       sb.append(s"# HELP $name $help\n# TYPE $name gauge\n$name $v\n")
@@ -52,6 +52,14 @@ final class Metrics {
     gauge("graft_sessions_active", "Live (unexpired) sessions", activeSessions.toDouble)
     counter("graft_datasources_registered_total", "Data sources ingested",
       dataSourcesRegistered.sum().toDouble)
+    sb.append("# HELP graft_result_cache_requests_total Session queries by result-cache outcome\n")
+    sb.append("# TYPE graft_result_cache_requests_total counter\n")
+    Seq("hit" -> cache.hits, "miss" -> cache.misses, "bypass" -> cache.bypasses).foreach {
+      case (o, n) => sb.append(s"""graft_result_cache_requests_total{outcome="$o"} ${n.sum()}""").append('\n')
+    }
+    counter("graft_result_cache_evictions_total", "Result-cache entries evicted to stay under the byte cap",
+      cache.evictions.sum().toDouble)
+    gauge("graft_result_cache_bytes", "Bytes charged by live result-cache entries", cache.bytes.toDouble)
     val rt = Runtime.getRuntime
     gauge("graft_jvm_heap_used_bytes", "JVM heap in use",
       (rt.totalMemory() - rt.freeMemory()).toDouble)

@@ -4,6 +4,7 @@ import java.io.OutputStream
 
 import org.apache.arrow.vector.VectorSchemaRoot
 import org.apache.arrow.vector.ipc.ArrowStreamWriter
+import org.apache.arrow.vector.types.pojo.Schema
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset}
@@ -27,10 +28,18 @@ object ArrowBridge {
     *
     * Returns the row count.
     */
-  def writeIpcStream(df: DataFrame, out: OutputStream, batchRows: Int = 1024,
-      buffered: Boolean = false): Long = {
+  def writeIpcStream(df: DataFrame, out: OutputStream, batchRows: Int = 1024): Long =
+    writeIpcRows(toArrowSchema(df), rowIterator(df), out, batchRows)
+
+  /** Write `rows` (laid out as `schema`, see [[toArrowSchema]]) as an
+    * Arrow IPC stream: the one writer under [[writeIpcStream]] and
+    * under a stored result re-encoded without running its plan.
+    * Returns the row count.
+    */
+  def writeIpcRows(schema: Schema, rows: Iterator[InternalRow], out: OutputStream,
+      batchRows: Int = 1024): Long = {
     var writer: ArrowStreamWriter = null
-    val n = foreachArrowBatch(df, batchRows, buffered) { root =>
+    val n = foreachBatch(schema, rows, batchRows) { root =>
       writer = new ArrowStreamWriter(root, null, out)
       writer.start()
     } { () => writer.writeBatch() }
@@ -41,24 +50,22 @@ object ArrowBridge {
   /** Pull `df`'s result into a VectorSchemaRoot batch-at-a-time:
     * `onStart` receives the root once (before any rows), `onBatch`
     * fires after each filled batch (at least once, so schema-only
-    * consumers see an empty batch). The generic consumer under
-    * [[writeIpcStream]] and the Flight server's `do_get` stream
-    * (ServerStreamListener start/putNext map 1:1). Returns rows.
+    * consumers see an empty batch). The Flight server's `do_get`
+    * stream (ServerStreamListener start/putNext map 1:1). Returns rows.
     */
-  def foreachArrowBatch(df: DataFrame, batchRows: Int = 1024,
-      buffered: Boolean = false)
+  def foreachArrowBatch(df: DataFrame, batchRows: Int = 1024)
+      (onStart: VectorSchemaRoot => Unit)(onBatch: () => Unit): Long =
+    foreachBatch(toArrowSchema(df), rowIterator(df), batchRows)(onStart)(onBatch)
+
+  private def foreachBatch(schema: Schema, rows: Iterator[InternalRow], batchRows: Int)
       (onStart: VectorSchemaRoot => Unit)(onBatch: () => Unit): Long = {
-    val ds = df.asInstanceOf[ClassicDataset[org.apache.spark.sql.Row]]
     val allocator = ArrowUtils.rootAllocator
       .newChildAllocator(s"graft-ipc-${System.nanoTime()}", 0, Long.MaxValue)
-    val root = VectorSchemaRoot.create(toArrowSchema(df), allocator)
+    val root = VectorSchemaRoot.create(schema, allocator)
     var n = 0L
     try {
       val arrowWriter = ArrowWriter.create(root)
       onStart(root)
-      val rows: Iterator[InternalRow] =
-        if (buffered) ds.queryExecution.executedPlan.executeCollect().iterator
-        else ds.queryExecution.executedPlan.executeToIterator()
       var inBatch = 0
       rows.foreach { r =>
         arrowWriter.write(r)
@@ -83,20 +90,23 @@ object ArrowBridge {
     }
   }
 
+  /** `df`'s result rows, pulled from the executed plan a partition at a
+    * time (driver-incremental): what [[writeIpcStream]],
+    * [[foreachArrowBatch]] and the HTTP Arrow responses stream.
+    */
+  def rowIterator(df: DataFrame): Iterator[InternalRow] =
+    df.asInstanceOf[ClassicDataset[org.apache.spark.sql.Row]]
+      .queryExecution.executedPlan.executeToIterator()
+
   /** The frame's schema as an Arrow schema (plan-only — nothing is
     * executed). `ArrowUtils` is private[sql], hence bridged here.
     */
-  def toArrowSchema(df: DataFrame): org.apache.arrow.vector.types.pojo.Schema = {
+  def toArrowSchema(df: DataFrame): Schema = {
     val ds = df.asInstanceOf[ClassicDataset[org.apache.spark.sql.Row]]
     ArrowUtils.toArrowSchema(ds.schema,
       ds.sparkSession.sessionState.conf.sessionLocalTimeZone,
       errorOnDuplicatedFieldNames = true, largeVarTypes = false)
   }
-
-  /** Streaming InternalRow iterator (driver-incremental). */
-  def rowIterator(df: DataFrame): Iterator[InternalRow] =
-    df.asInstanceOf[ClassicDataset[org.apache.spark.sql.Row]]
-      .queryExecution.executedPlan.executeToIterator()
 
   /** Read an Arrow IPC stream into a DataFrame — the ingest direction
     * of [[writeIpcStream]] (reference `DataSourceFormat::Arrow`,

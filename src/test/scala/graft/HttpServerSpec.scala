@@ -937,4 +937,37 @@ class HttpServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(created >= 1.0, s"created=$created")
     delete("/session/mx")
   }
+
+  test("/metrics: result-cache outcomes, evictions and bytes move with session queries") {
+    def metric(body: String, series: String): Double =
+      body.linesIterator.find(_.startsWith(series + " ")).map(_.split(' ')(1).toDouble)
+        .getOrElse(fail(s"no $series in /metrics"))
+    val outcome = (o: String) => s"""graft_result_cache_requests_total{outcome="$o"}"""
+    val before = get("/metrics").body()
+    post("/session?id=rcm", "")
+    post("/session/rcm/datasource",
+      s"""{"format":"parquet","name":"region","location":"${SparkFixture.sfDir}/region.parquet"}""")
+    val sql = "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey"
+    val miss = post("/session/rcm/query", sql, "application/sql")
+    assert(miss.statusCode() == 200, miss.body())
+    assert(post("/session/rcm/query", sql, "application/sql").body() == miss.body())
+    post("/session/rcm/query", "SELECT random() AS r FROM region", "application/sql")
+    // ~1 MB results, each its own entry, until the byte cap evicts
+    val n = (graft.serve.ResultCache.MaxBytes / graft.serve.ResultCache.MaxEntryBytes).toInt + 1
+    (0 until n).foreach { i =>
+      val r = post("/session/rcm/query",
+        s"SELECT r_regionkey, repeat('x', 1000000) AS pad, $i AS i FROM region WHERE r_regionkey = 0",
+        "application/sql")
+      assert(r.statusCode() == 200, r.body().take(200))
+    }
+    val after = get("/metrics").body()
+    Seq("hit", "miss", "bypass").foreach { o =>
+      assert(metric(after, outcome(o)) > metric(before, outcome(o)), o)
+    }
+    assert(metric(after, "graft_result_cache_evictions_total") >
+      metric(before, "graft_result_cache_evictions_total"))
+    val bytes = metric(after, "graft_result_cache_bytes")
+    assert(bytes > 0 && bytes <= graft.serve.ResultCache.MaxBytes, s"bytes=$bytes")
+    delete("/session/rcm")
+  }
 }

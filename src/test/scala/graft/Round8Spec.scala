@@ -347,7 +347,7 @@ class Round8Spec extends AnyFunSuite {
     assert(mmr.map(_._1) == Seq(1L, 2L), "ranks must be 1..k in selection order")
   }
 
-  test("mmr fuzz: 10 random corpora match an in-JVM greedy reference") {
+  test("mmr fuzz: 12 random corpora match an in-JVM greedy reference") {
     import spark.implicits._
     val rnd = new scala.util.Random(0x5eed8006L)
     for (round <- 0 until 12) {
