@@ -28,12 +28,9 @@ import scala.util.control.NonFatal
   * same conf share an entry; a rewritten file, a re-registered
   * location or a changed conf misses. Entries hold rows as copied
   * UnsafeRows (never Spark's CacheManager or RDD blocks), within a
-  * total byte cap, least recently used evicted first. The caps are
-  * the companion's constants; only tests in this codebase pass
-  * smaller ones.
+  * total byte cap, least recently used evicted first.
   */
-final class ResultCache private[graft] (maxBytes: Long = ResultCache.MaxBytes,
-    maxEntryBytes: Long = ResultCache.MaxEntryBytes) {
+final class ResultCache {
   import ResultCache._
 
   // access-ordered: iteration starts at the least recently used entry
@@ -79,7 +76,7 @@ final class ResultCache private[graft] (maxBytes: Long = ResultCache.MaxBytes,
       entries.put(key, e)
       used += e.bytes
       val it = entries.values().iterator()
-      while (used > maxBytes && it.hasNext) {
+      while (used > MaxBytes && it.hasNext) {
         used -= it.next().bytes
         it.remove()
         evictions.increment()
@@ -118,7 +115,7 @@ final class ResultCache private[graft] (maxBytes: Long = ResultCache.MaxBytes,
     private lazy val toInternal = ExpressionEncoder(schema).createSerializer()
 
     private def add(r: InternalRow): Unit = if (!over) r match {
-      case u: UnsafeRow if rowBytes + u.getSizeInBytes <= maxEntryBytes =>
+      case u: UnsafeRow if rowBytes + u.getSizeInBytes <= MaxEntryBytes =>
         kept += u.copy()
         rowBytes += u.getSizeInBytes
       case _ =>
@@ -173,13 +170,19 @@ object ResultCache {
         fs.fileFormat.getClass, fs.options, fs.bucketSpec)
   }
 
-  /** A stored result: the rows as UnsafeRows and the bytes it charges. */
-  private[serve] final class Entry(val schema: StructType, val rows: Vector[InternalRow], val bytes: Long) {
+  /** A stored result: the rows as UnsafeRows, the schema they were
+    * written with, and the bytes it charges.
+    */
+  private[serve] final class Entry(schema: StructType, val rows: Vector[InternalRow], val bytes: Long) {
     private lazy val encoder = ExpressionEncoder(schema).resolveAndBind()
 
-    /** The stored rows as the row source of `df`, the request that hit. */
+    /** The stored rows as the row source of `df`, the request that hit.
+      * Canonical plans drop aliases and attribute names, so queries
+      * that differ only in their output names share an entry: the
+      * names come from `df`; positions and types are the entry's.
+      */
     def source(df: DataFrame): RowSource = new RowSource {
-      def schema: StructType = Entry.this.schema
+      def schema: StructType = df.schema
       def arrowSchema: Schema = ArrowBridge.toArrowSchema(df)
       def rows: Iterator[Row] = {
         val toRow = encoder.createDeserializer()

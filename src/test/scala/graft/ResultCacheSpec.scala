@@ -143,6 +143,24 @@ class ResultCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("queries that differ only in their output names share an entry and answer with their own names") {
+    withSession("rc-alias") {
+      register("rc-alias", "t", typed)
+      val a = "SELECT count(*) AS a, max(d) AS top FROM t"
+      assert(outcomes(query("rc-alias", a)) == ((0L, 1L, 0L)))
+      assert(new String(query("rc-alias", a)) == """[{"a":5,"top":1.0}]""")
+      val b = "SELECT count(*) AS b, max(d) FROM t"
+      Seq("json" -> ResponseEncoders.JsonFormat, "csv" -> ResponseEncoders.CsvFormat,
+        "arrow" -> ResponseEncoders.ArrowFormat).foreach { case (name, fmt) =>
+        var hit = Array.empty[Byte]
+        assert(outcomes { hit = query("rc-alias", b, name) } == ((1L, 0L, 0L)), name)
+        assert(hit.sameElements(cacheless(typed, b, fmt)), s"$name hit under other output names")
+      }
+      assert(new String(query("rc-alias", b)) == """[{"b":5,"max(d)":1.0}]""")
+      assert(new String(query("rc-alias", b, "csv")) == "b,max(d)\n5,1.0\n")
+    }
+  }
+
   test("two sessions over the same files share one entry; the second session's hit runs no job") {
     withSession("rc-a") {
       withSession("rc-b") {
@@ -288,25 +306,26 @@ class ResultCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("LRU eviction keeps the charged bytes at or under the cap and drops the least recently used") {
-    val entry = ResultCache.EntryOverheadBytes + 1024
-    val small = new ResultCache(maxBytes = 3 * entry, maxEntryBytes = 1024)
-    val s = spark.newSession()
-    def serve(i: Int): Unit = small.serve(s.read.parquet(typed.toString).where(s"id = $i")) { src =>
-      ResponseEncoders.encode(src, ResponseEncoders.JsonFormat, new java.io.ByteArrayOutputStream())
+    withSession("rc-lru") {
+      register("rc-lru", "t", typed)
+      cache.clear()
+      // ~1 MB results, one entry each, at the real caps
+      val pad = 1000000
+      val fit = (ResultCache.MaxBytes / (pad + ResultCache.EntryOverheadBytes)).toInt
+      def sql(i: Int) = s"SELECT id, repeat('x', $pad) AS pad, $i AS i FROM t WHERE id = 1"
+      val evicted = cache.evictions.sum()
+      (0 until fit).foreach(i => query("rc-lru", sql(i)))
+      assert(cache.size == fit && cache.evictions.sum() == evicted)
+      // 0 is the most recently used now; 1 is the eldest
+      assert(outcomes(query("rc-lru", sql(0))) == ((1L, 0L, 0L)))
+      query("rc-lru", sql(fit))
+      assert(cache.evictions.sum() == evicted + 1)
+      assert(cache.bytes <= ResultCache.MaxBytes)
+      assert(outcomes(query("rc-lru", sql(0))) == ((1L, 0L, 0L)), "the touched entry was evicted")
+      assert(outcomes(query("rc-lru", sql(1))) == ((0L, 1L, 0L)), "the least recently used entry survived")
+      assert(cache.bytes <= ResultCache.MaxBytes)
+      cache.clear()
     }
-    (0 to 2).foreach(serve)
-    serve(0) // most recently used now; 1 is the eldest
-    serve(3)
-    assert(small.size == 3)
-    assert(small.evictions.sum() == 1L)
-    assert(small.bytes <= 3 * entry)
-    val hits = small.hits.sum()
-    serve(0)
-    assert(small.hits.sum() == hits + 1, "the touched entry was evicted")
-    val misses = small.misses.sum()
-    serve(1)
-    assert(small.misses.sum() == misses + 1, "the least recently used entry survived")
-    assert(small.bytes <= 3 * entry)
   }
 
   test("stop() empties the cache") {
