@@ -39,7 +39,8 @@ final class SessionHandle(
     */
   val rawDataSourceReqs = new ConcurrentHashMap[String, AnyRef]()
 
-  /** Frames this session has .cache()'d (merge materializations):
+  /** Frames this session has .cache()'d (CTAS / INSERT states and the
+    * last recursive-CTE accumulator):
     * unpersisted on replacement and on session removal — Spark's
     * CacheManager is shared across newSession()s, so an unreleased
     * cache would outlive the session.
@@ -167,14 +168,12 @@ final class SessionManager(root: SparkSession, reaperPeriodMs: Long = 1000L) {
     * in the catalog of the frame's own session, so a root-session
     * frame would silently register in the wrong (shared) catalog.
     */
-  def registerTable(h: SessionHandle, df: DataFrame, ds: DataSourceDef,
-      materialize: Boolean = false): Unit = {
+  def registerTable(h: SessionHandle, df: DataFrame, ds: DataSourceDef): Unit = {
     require(df.sparkSession eq h.spark,
       s"DataFrame for '${ds.name}' was built from a different SparkSession " +
         s"than session '${h.id}' — use h.spark.read... so the temp view " +
         "lands in the session's isolated catalog")
-    val bound = if (materialize) { val c = df.cache(); c.count(); c } else df
-    bound.createOrReplaceTempView(ds.name)
+    df.createOrReplaceTempView(ds.name)
     h.dataSources.put(ds.name, ds)
     h.touch()
   }
@@ -182,7 +181,7 @@ final class SessionManager(root: SparkSession, reaperPeriodMs: Long = 1000L) {
   def removeTable(h: SessionHandle, name: String): Boolean = {
     h.dataSources.remove(name)
     h.rawDataSourceReqs.remove(name)
-    // release any materialized state (merge / INSERT / CTAS) with the view
+    // release any materialized state (INSERT / CTAS) with the view
     val prev = h.cachedFrames.remove(name)
     if (prev != null) { try prev.unpersist() catch { case _: Throwable => () } }
     h.spark.catalog.dropTempView(name)

@@ -167,8 +167,7 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
             }
           val df = Processors.applyAll(sessions.sql(h, sql), post)
           val format = negotiate(ex, fmt)
-          respondStream(ex, format)(out =>
-            resultCache.serve(df)(ResponseEncoders.encode(_, format, out)))
+          respondStream(ex, format)(resultCache.serve(df, format, _))
         }
       case ("POST", Array(id, "datasource", "upload")) =>
         withSession(ex, id) { h =>
@@ -614,15 +613,14 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
         MergeProcessor.mergeRows(base, m.targetTables.map(h.spark.table), m.distinct)
       case d => throw new IllegalArgumentException(s"unknown merge direction: $d")
     }
-    // materialize + re-register, replacing the base table
-    // (reference: session.rs:646-652); release any previous
-    // materialization of the same name (shared CacheManager)
-    Option(h.cachedFrames.get(m.baseTable)).foreach(df =>
+    // re-register, replacing the base table (reference:
+    // session.rs:646-652): the merged table is a plan over its
+    // inputs, not a materialization. A previous materialized state of
+    // the same name (CTAS / INSERT) is released from the shared
+    // CacheManager.
+    Option(h.cachedFrames.remove(m.baseTable)).foreach(df =>
       try df.unpersist() catch { case _: Throwable => () })
-    val cached = merged.cache()
-    cached.count()
-    cached.createOrReplaceTempView(m.baseTable)
-    h.cachedFrames.put(m.baseTable, cached)
+    merged.createOrReplaceTempView(m.baseTable)
     if (m.removeAfterMerged) {
       val removable = (m.targets.map(_.table) ++ m.targetTables).distinct
         .filterNot(_ == m.baseTable)

@@ -1,9 +1,7 @@
 package graft.serve
 
 import com.fasterxml.jackson.core.JsonFactory
-import org.apache.arrow.vector.types.pojo.Schema
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graftbridge.ArrowBridge
 import org.apache.spark.sql.types._
 
@@ -57,39 +55,10 @@ object ResponseEncoders {
         }
     }
 
-  /** A result to encode: its schema and its rows, in the form each
-    * writer reads — external [[Row]]s for JSON and CSV, the plan's
-    * InternalRows for Arrow. Each writer reads one iterator, once.
-    */
-  trait RowSource {
-    def schema: StructType
-    def arrowSchema: Schema
-    def rows: Iterator[Row]
-    def internalRows: Iterator[InternalRow]
-  }
-
-  object RowSource {
-    /** `df`'s result streamed from its plan: `toLocalIterator` (one
-      * partition at a time on the driver — the streamed-delivery
-      * analogue of execute_stream, SURVEY §1.1) or the executed plan's
-      * rows for Arrow.
-      */
-    def apply(df: DataFrame): RowSource = new RowSource {
-      def schema: StructType = df.schema
-      def arrowSchema: Schema = ArrowBridge.toArrowSchema(df)
-      def rows: Iterator[Row] = df.toLocalIterator().asScala
-      def internalRows: Iterator[InternalRow] = ArrowBridge.rowIterator(df)
-    }
-  }
-
-  def encode(df: DataFrame, fmt: Format, out: OutputStream): Unit =
-    encode(RowSource(df), fmt, out)
-
-  /** The rows-in writers, one per format. */
-  def encode(src: RowSource, fmt: Format, out: OutputStream): Unit = fmt match {
-    case JsonFormat  => writeJsonRows(src.schema, src.rows, out)
-    case CsvFormat   => writeCsvRows(src.schema, src.rows, out)
-    case ArrowFormat => ArrowBridge.writeIpcRows(src.arrowSchema, src.internalRows, out): Unit
+  def encode(df: DataFrame, fmt: Format, out: OutputStream): Unit = fmt match {
+    case JsonFormat  => writeJsonArray(df, out)
+    case CsvFormat   => writeCsv(df, out)
+    case ArrowFormat => ArrowBridge.writeIpcStream(df, out): Unit
   }
 
   def encodeToBytes(df: DataFrame, fmt: Format): Array[Byte] = {
@@ -104,12 +73,13 @@ object ResponseEncoders {
 
   private val jsonFactory = new JsonFactory()
 
-  def writeJsonArray(df: DataFrame, out: OutputStream): Unit = encode(df, JsonFormat, out)
-
-  private def writeJsonRows(schema: StructType, rows: Iterator[Row], out: OutputStream): Unit = {
+  def writeJsonArray(df: DataFrame, out: OutputStream): Unit = {
     val gen = jsonFactory.createGenerator(out)
+    val schema = df.schema
     gen.writeStartArray()
-    rows.foreach { row =>
+    // toLocalIterator: one partition at a time on the driver — the
+    // streamed-delivery analogue of execute_stream (SURVEY §1.1).
+    df.toLocalIterator().asScala.foreach { row =>
       gen.writeStartObject()
       schema.fields.zipWithIndex.foreach { case (f, i) =>
         gen.writeFieldName(f.name)
@@ -172,9 +142,10 @@ object ResponseEncoders {
   // defaults.
   // ----------------------------------------------------------------
 
-  private def writeCsvRows(schema: StructType, rows: Iterator[Row], out: OutputStream): Unit = {
+  private def writeCsv(df: DataFrame, out: OutputStream): Unit = {
     val delimiter = ','
     val w = new OutputStreamWriter(out, StandardCharsets.UTF_8)
+    val schema = df.schema
     def field(s: String): String =
       if (s.indexOf(delimiter) >= 0 || s.indexOf('"') >= 0 ||
           s.indexOf('\n') >= 0 || s.indexOf('\r') >= 0)
@@ -182,7 +153,7 @@ object ResponseEncoders {
       else s
     w.write(schema.fieldNames.map(field).mkString(delimiter.toString))
     w.write("\n")
-    rows.foreach { row =>
+    df.toLocalIterator().asScala.foreach { row =>
       val cells = schema.fields.zipWithIndex.map { case (f, i) =>
         val v = row.get(i)
         if (v == null) ""

@@ -1,40 +1,40 @@
 package graft.serve
 
-import graft.serve.ResponseEncoders.RowSource
-import org.apache.arrow.vector.types.pojo.Schema
+import graft.serve.ResponseEncoders.Format
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.graftbridge.ArrowBridge
 import org.apache.spark.sql.types.StructType
 
+import java.io.{ByteArrayOutputStream, OutputStream}
 import java.util.concurrent.atomic.LongAdder
-import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
-/** Server-wide cache of session-query results: repeated SQL over the
-  * same files is answered from stored rows, encoded to the requested
-  * format, with no Spark job. Only `POST /session/{id}/query` reads it;
-  * `Verify`, `Bench` and the engine calls below the HTTP layer never do.
+/** Server-wide cache of session-query responses: repeated SQL over the
+  * same files is answered with the bytes its first answer sent, in the
+  * same format, with no Spark job. Only `POST /session/{id}/query`
+  * reads it; `Verify`, `Bench` and the engine calls below the HTTP
+  * layer never do.
   *
   * Key: the optimized plan's canonical form (its hash buckets, plan
   * equality confirms — `semanticHash` / `sameSemantics`), the
-  * session's SQL conf, and (path, length, mtime) of every file the
-  * plan reads. Two sessions that registered the same files with the
-  * same conf share an entry; a rewritten file, a re-registered
-  * location or a changed conf misses. Entries hold rows as copied
-  * UnsafeRows (never Spark's CacheManager or RDD blocks), within a
-  * total byte cap, least recently used evicted first.
+  * session's SQL conf, (path, length, mtime) of every file the plan
+  * reads, the output schema and the response format. Two sessions that
+  * registered the same files with the same conf share an entry; a
+  * rewritten file, a re-registered location or a changed conf misses.
+  * Canonical plans drop output names, but the encoded bytes carry them
+  * (JSON keys, the CSV header, Arrow field names), so the schema is in
+  * the key too. Entries hold the encoded response (never Spark's
+  * CacheManager or RDD blocks), within a total byte cap, least
+  * recently used evicted first.
   */
 final class ResultCache {
   import ResultCache._
 
   // access-ordered: iteration starts at the least recently used entry
-  private val entries = new java.util.LinkedHashMap[Key, Entry](16, 0.75f, true)
+  private val entries = new java.util.LinkedHashMap[Key, Array[Byte]](16, 0.75f, true)
   private var used = 0L // guarded by entries
 
   val hits = new LongAdder
@@ -47,37 +47,37 @@ final class ResultCache {
 
   def size: Int = entries.synchronized(entries.size)
 
-  /** Encode `df`'s result through the cache. `write` encodes a row
-    * source to the response and throws if it could not write it all.
-    * A hit writes the stored rows; a miss streams the plan and copies
-    * its rows aside, admitted once `write` returns if they fit the
-    * entry cap; an ineligible result only streams.
+  /** Encode `df`'s result as `fmt` to `out` through the cache. A hit
+    * writes the stored bytes; a miss encodes as with no cache, copying
+    * what it writes up to the entry cap, and admits the copy once the
+    * encoder returns; an ineligible result only encodes. Throws, and
+    * admits nothing, if the encoder could not write it all.
     */
-  def serve(df: DataFrame)(write: RowSource => Unit): Unit = keyOf(df) match {
+  def serve(df: DataFrame, fmt: Format, out: OutputStream): Unit = keyOf(df, fmt) match {
     case None =>
       bypasses.increment()
-      write(RowSource(df))
+      ResponseEncoders.encode(df, fmt, out)
     case Some(key) =>
       entries.synchronized(Option(entries.get(key))) match {
-        case Some(e) =>
+        case Some(body) =>
           hits.increment()
-          write(e.source(df))
+          out.write(body)
         case None =>
           misses.increment()
-          val copy = new Copy(df.schema)
-          write(copy.tee(RowSource(df)))
-          copy.entry.foreach(admit(key, _))
+          val tee = new Tee(out)
+          ResponseEncoders.encode(df, fmt, tee)
+          tee.copy.foreach(admit(key, _))
       }
   }
 
-  private def admit(key: Key, e: Entry): Unit = entries.synchronized {
+  private def admit(key: Key, body: Array[Byte]): Unit = entries.synchronized {
     // a concurrent identical miss may have won the race: keep its entry
     if (!entries.containsKey(key)) {
-      entries.put(key, e)
-      used += e.bytes
+      entries.put(key, body)
+      used += charge(body)
       val it = entries.values().iterator()
       while (used > MaxBytes && it.hasNext) {
-        used -= it.next().bytes
+        used -= charge(it.next())
         it.remove()
         evictions.increment()
       }
@@ -93,7 +93,7 @@ final class ResultCache {
     * nondeterministic or reads the clock or the caller's identity, or
     * an input file cannot be stat'ed.
     */
-  private def keyOf(df: DataFrame): Option[Key] = {
+  private def keyOf(df: DataFrame, fmt: Format): Option[Key] = {
     val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].queryExecution
     val plan = qe.optimizedPlan
     val leaves = plan.collectWithSubqueries { case l: LeafNode => l }
@@ -104,34 +104,7 @@ final class ResultCache {
     } && !volatile(qe.analyzed)
     if (!eligible) None
     else stat(files.flatMap(_.location.inputFiles).distinct.sorted, df).map(
-      Key(detach(plan.canonicalized), df.sparkSession.conf.getAll, _))
-  }
-
-  /** Copies a miss's rows as they stream, until they outgrow the entry cap. */
-  private final class Copy(schema: StructType) {
-    private val kept = ArrayBuffer.empty[InternalRow]
-    private var rowBytes = 0L
-    private var over = false
-    private lazy val toInternal = ExpressionEncoder(schema).createSerializer()
-
-    private def add(r: InternalRow): Unit = if (!over) r match {
-      case u: UnsafeRow if rowBytes + u.getSizeInBytes <= MaxEntryBytes =>
-        kept += u.copy()
-        rowBytes += u.getSizeInBytes
-      case _ =>
-        over = true
-        kept.clear()
-    }
-
-    def tee(src: RowSource): RowSource = new RowSource {
-      def schema: StructType = src.schema
-      def arrowSchema: Schema = src.arrowSchema
-      def rows: Iterator[Row] = src.rows.map { r => if (!over) add(toInternal(r)); r }
-      def internalRows: Iterator[InternalRow] = src.internalRows.map { r => add(r); r }
-    }
-
-    def entry: Option[Entry] =
-      if (over) None else Some(new Entry(schema, kept.toVector, rowBytes + EntryOverheadBytes))
+      Key(detach(plan.canonicalized), df.sparkSession.conf.getAll, _, df.schema, fmt))
   }
 }
 
@@ -140,7 +113,7 @@ object ResultCache {
   /** Total bytes the entries may charge. */
   val MaxBytes: Long = 16L << 20
 
-  /** Rows of one result above this many bytes stream but are not kept. */
+  /** A response above this many bytes streams but is not kept. */
   val MaxEntryBytes: Long = 1L << 20
 
   /** Fixed charge per entry for the plan and file list its key keeps,
@@ -149,11 +122,11 @@ object ResultCache {
   val EntryOverheadBytes: Long = 16L << 10
 
   /** Canonical optimized plan, session SQL conf, (path, length, mtime)
-    * of every input file. Equality on the canonical plan is
-    * `sameSemantics`; its hash is `semanticHash`.
+    * of every input file, output schema, response format. Equality on
+    * the canonical plan is `sameSemantics`; its hash is `semanticHash`.
     */
-  private[serve] final case class Key(plan: LogicalPlan, conf: Map[String, String],
-      files: Seq[(String, Long, Long)])
+  private final case class Key(plan: LogicalPlan, conf: Map[String, String],
+      files: Seq[(String, Long, Long)], schema: StructType, format: Format)
 
   /** A file relation in a key: the fields HadoopFsRelation equality
     * compares (its file index compares root paths), without the
@@ -170,26 +143,28 @@ object ResultCache {
         fs.fileFormat.getClass, fs.options, fs.bucketSpec)
   }
 
-  /** A stored result: the rows as UnsafeRows, the schema they were
-    * written with, and the bytes it charges.
-    */
-  private[serve] final class Entry(schema: StructType, val rows: Vector[InternalRow], val bytes: Long) {
-    private lazy val encoder = ExpressionEncoder(schema).resolveAndBind()
+  private def charge(body: Array[Byte]): Long = body.length + EntryOverheadBytes
 
-    /** The stored rows as the row source of `df`, the request that hit.
-      * Canonical plans drop aliases and attribute names, so queries
-      * that differ only in their output names share an entry: the
-      * names come from `df`; positions and types are the entry's.
-      */
-    def source(df: DataFrame): RowSource = new RowSource {
-      def schema: StructType = df.schema
-      def arrowSchema: Schema = ArrowBridge.toArrowSchema(df)
-      def rows: Iterator[Row] = {
-        val toRow = encoder.createDeserializer()
-        Entry.this.rows.iterator.map(toRow(_))
+  /** Passes every write through to `out` and copies it aside until
+    * the copy would outgrow the entry cap.
+    */
+  private final class Tee(out: OutputStream) extends OutputStream {
+    private var kept = new ByteArrayOutputStream()
+
+    override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+      out.write(b, off, len)
+      if (kept != null) {
+        if (kept.size + len > MaxEntryBytes) kept = null
+        else kept.write(b, off, len)
       }
-      def internalRows: Iterator[InternalRow] = Entry.this.rows.iterator
     }
+
+    override def flush(): Unit = out.flush()
+
+    /** The bytes written, unless they outgrew the entry cap. */
+    def copy: Option[Array[Byte]] = Option(kept).map(_.toByteArray)
   }
 
   /** The analyzed plan draws randomness or reads the clock, the user,

@@ -28,18 +28,9 @@ object ArrowBridge {
     *
     * Returns the row count.
     */
-  def writeIpcStream(df: DataFrame, out: OutputStream, batchRows: Int = 1024): Long =
-    writeIpcRows(toArrowSchema(df), rowIterator(df), out, batchRows)
-
-  /** Write `rows` (laid out as `schema`, see [[toArrowSchema]]) as an
-    * Arrow IPC stream: the one writer under [[writeIpcStream]] and
-    * under a stored result re-encoded without running its plan.
-    * Returns the row count.
-    */
-  def writeIpcRows(schema: Schema, rows: Iterator[InternalRow], out: OutputStream,
-      batchRows: Int = 1024): Long = {
+  def writeIpcStream(df: DataFrame, out: OutputStream, batchRows: Int = 1024): Long = {
     var writer: ArrowStreamWriter = null
-    val n = foreachBatch(schema, rows, batchRows) { root =>
+    val n = foreachArrowBatch(df, batchRows) { root =>
       writer = new ArrowStreamWriter(root, null, out)
       writer.start()
     } { () => writer.writeBatch() }
@@ -50,24 +41,21 @@ object ArrowBridge {
   /** Pull `df`'s result into a VectorSchemaRoot batch-at-a-time:
     * `onStart` receives the root once (before any rows), `onBatch`
     * fires after each filled batch (at least once, so schema-only
-    * consumers see an empty batch). The Flight server's `do_get`
-    * stream (ServerStreamListener start/putNext map 1:1). Returns rows.
+    * consumers see an empty batch). The generic consumer under
+    * [[writeIpcStream]] and the Flight server's `do_get` stream
+    * (ServerStreamListener start/putNext map 1:1). Returns rows.
     */
   def foreachArrowBatch(df: DataFrame, batchRows: Int = 1024)
-      (onStart: VectorSchemaRoot => Unit)(onBatch: () => Unit): Long =
-    foreachBatch(toArrowSchema(df), rowIterator(df), batchRows)(onStart)(onBatch)
-
-  private def foreachBatch(schema: Schema, rows: Iterator[InternalRow], batchRows: Int)
       (onStart: VectorSchemaRoot => Unit)(onBatch: () => Unit): Long = {
     val allocator = ArrowUtils.rootAllocator
       .newChildAllocator(s"graft-ipc-${System.nanoTime()}", 0, Long.MaxValue)
-    val root = VectorSchemaRoot.create(schema, allocator)
+    val root = VectorSchemaRoot.create(toArrowSchema(df), allocator)
     var n = 0L
     try {
       val arrowWriter = ArrowWriter.create(root)
       onStart(root)
       var inBatch = 0
-      rows.foreach { r =>
+      rowIterator(df).foreach { r =>
         arrowWriter.write(r)
         inBatch += 1
         n += 1
@@ -91,10 +79,9 @@ object ArrowBridge {
   }
 
   /** `df`'s result rows, pulled from the executed plan a partition at a
-    * time (driver-incremental): what [[writeIpcStream]],
-    * [[foreachArrowBatch]] and the HTTP Arrow responses stream.
+    * time (driver-incremental).
     */
-  def rowIterator(df: DataFrame): Iterator[InternalRow] =
+  private def rowIterator(df: DataFrame): Iterator[InternalRow] =
     df.asInstanceOf[ClassicDataset[org.apache.spark.sql.Row]]
       .queryExecution.executedPlan.executeToIterator()
 

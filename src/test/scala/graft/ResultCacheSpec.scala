@@ -122,42 +122,41 @@ class ResultCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("a hit is byte-identical to the miss and to the cache-less answer, in every format") {
     withSession("rc-fmt") {
       register("rc-fmt", "t", typed)
-      Seq("json" -> ResponseEncoders.JsonFormat, "csv" -> ResponseEncoders.CsvFormat,
-        "arrow" -> ResponseEncoders.ArrowFormat).zipWithIndex.foreach { case ((name, fmt), i) =>
-        // a text per format, so each format's first request is its own miss
-        val sql = typedSql.replace("id < 5", s"id < ${5 + i}")
+      // the same SQL in each format in turn: an entry holds one
+      // format's bytes, so after the JSON admit the Arrow and the CSV
+      // request each miss first, then hit their own entry
+      Seq("json" -> ResponseEncoders.JsonFormat, "arrow" -> ResponseEncoders.ArrowFormat,
+        "csv" -> ResponseEncoders.CsvFormat).foreach { case (name, fmt) =>
         var miss, hit = Array.empty[Byte]
-        assert(outcomes { miss = query("rc-fmt", sql, name) } == ((0L, 1L, 0L)), name)
-        assert(outcomes { hit = query("rc-fmt", sql, name) } == ((1L, 0L, 0L)), name)
+        assert(outcomes { miss = query("rc-fmt", typedSql, name) } == ((0L, 1L, 0L)), name)
+        assert(outcomes { hit = query("rc-fmt", typedSql, name) } == ((1L, 0L, 0L)), name)
         assert(hit.sameElements(miss), s"$name hit differs from its miss")
-        assert(miss.sameElements(cacheless(typed, sql, fmt)), s"$name miss differs from the cache-less encode")
+        assert(miss.sameElements(cacheless(typed, typedSql, fmt)), s"$name miss differs from the cache-less encode")
       }
-      // an entry admitted by a JSON miss serves the other formats too
-      val sql = typedSql
-      Seq("arrow" -> ResponseEncoders.ArrowFormat, "csv" -> ResponseEncoders.CsvFormat).foreach {
-        case (name, fmt) =>
-          var hit = Array.empty[Byte]
-          assert(outcomes { hit = query("rc-fmt", sql, name) } == ((1L, 0L, 0L)), name)
-          assert(hit.sameElements(cacheless(typed, sql, fmt)), s"$name hit of a json entry")
-      }
+      assert(outcomes(query("rc-fmt", typedSql)) == ((1L, 0L, 0L)), "the json entry is still served")
     }
   }
 
-  test("queries that differ only in their output names share an entry and answer with their own names") {
+  test("queries that differ only in their output names answer with their own names") {
     withSession("rc-alias") {
       register("rc-alias", "t", typed)
       val a = "SELECT count(*) AS a, max(d) AS top FROM t"
       assert(outcomes(query("rc-alias", a)) == ((0L, 1L, 0L)))
       assert(new String(query("rc-alias", a)) == """[{"a":5,"top":1.0}]""")
+      // the same canonical plan under other names: the names are part
+      // of the key, so this is its own miss, then its own hit
       val b = "SELECT count(*) AS b, max(d) FROM t"
       Seq("json" -> ResponseEncoders.JsonFormat, "csv" -> ResponseEncoders.CsvFormat,
         "arrow" -> ResponseEncoders.ArrowFormat).foreach { case (name, fmt) =>
-        var hit = Array.empty[Byte]
+        var miss, hit = Array.empty[Byte]
+        assert(outcomes { miss = query("rc-alias", b, name) } == ((0L, 1L, 0L)), name)
         assert(outcomes { hit = query("rc-alias", b, name) } == ((1L, 0L, 0L)), name)
-        assert(hit.sameElements(cacheless(typed, b, fmt)), s"$name hit under other output names")
+        val want = cacheless(typed, b, fmt)
+        assert(miss.sameElements(want) && hit.sameElements(want), s"$name under other output names")
       }
       assert(new String(query("rc-alias", b)) == """[{"b":5,"max(d)":1.0}]""")
       assert(new String(query("rc-alias", b, "csv")) == "b,max(d)\n5,1.0\n")
+      assert(new String(query("rc-alias", a)) == """[{"a":5,"top":1.0}]""")
     }
   }
 
@@ -256,8 +255,8 @@ class ResultCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(outcomes { query("rc-mem", mem); query("rc-mem", mem) } == ((0L, 0L, 2L)))
       assert(new String(query("rc-mem", mem)) == """[{"id":0,"d":0.0},{"id":1,"d":0.25},{"id":2,"d":0.5}]""")
 
-      // the merge's cached copy does not survive replacing the base
-      // view, so the merged table reads its files and may be cached
+      // a merged table is a plan over its inputs' files, so it may be
+      // cached
       val merged = tmp.resolve("typed-merge")
       org.apache.commons.io.FileUtils.copyDirectory(typed.toFile, merged.toFile)
       register("rc-mem", "m", merged)
@@ -268,6 +267,34 @@ class ResultCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
       val count = "SELECT count(*) AS n FROM m"
       assert(outcomes { query("rc-mem", count); query("rc-mem", count) } == ((1L, 1L, 0L)))
       assert(new String(query("rc-mem", count)) == """[{"n":10}]""")
+    }
+  }
+
+  test("a processor merge runs no Spark job and caches nothing; the merged table answers as a plan") {
+    withSession("rc-merge") {
+      val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+      Seq("r", "r2", "c", "c2").foreach(register("rc-merge", _, typed))
+      def merge(table: String, processor: String): Unit = {
+        val jobs = jobsDuring {
+          val r = post("/session/rc-merge/processor", s"""{"mergeProcessors":[$processor]}""")
+          assert(r.statusCode() == 204, new String(r.body()))
+        }
+        assert(jobs == 0, s"the $table merge ran $jobs Spark jobs")
+        val h = server.sessions.get("rc-merge").get
+        assert(cm.lookupCachedData(h.spark.table(table).asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+          .isEmpty, s"the $table merge left a cached plan")
+        assert(!h.cachedFrames.containsKey(table))
+      }
+      merge("r", """{"direction":"row","baseTable":"r","targetTables":["r2"]}""")
+      assert(new String(query("rc-merge", "SELECT id, count(*) AS n FROM r WHERE id < 2 GROUP BY id ORDER BY id")) ==
+        """[{"id":0,"n":2},{"id":1,"n":2}]""")
+      merge("c", """{"direction":"column","baseTable":"c","targets":[{"table":"c2","baseKeys":["id"],""" +
+        """"targetKeys":["id"]}],"options":{"removeAfterMerged":true}}""")
+      assert(new String(query("rc-merge", "SELECT id, d, c2_d, c2_maybe FROM c WHERE id < 3 ORDER BY id")) ==
+        """[{"id":0,"d":0.0,"c2_d":0.0,"c2_maybe":null},{"id":1,"d":0.25,"c2_d":0.25,"c2_maybe":"odd"},""" +
+          """{"id":2,"d":0.5,"c2_d":0.5,"c2_maybe":null}]""")
+      assert(post("/session/rc-merge/query", """{"sql":"SELECT count(*) FROM c2"}""").statusCode() != 200)
+      assert(new String(query("rc-merge", "SELECT count(*) AS n FROM r2")) == """[{"n":5}]""")
     }
   }
 
