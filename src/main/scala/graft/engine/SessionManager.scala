@@ -141,9 +141,7 @@ final class SessionManager(root: SparkSession, reaperPeriodMs: Long = 1000L) {
   def remove(id: String): Boolean = Option(sessions.remove(id)) match {
     case Some(h) =>
       // release shared-CacheManager entries and spooled ingest bytes
-      h.cachedFrames.values().asScala.foreach(df =>
-        try df.unpersist() catch { case _: Throwable => () })
-      h.cachedFrames.clear()
+      h.cachedFrames.keySet().asScala.toSeq.foreach(release(h, _))
       // session-scoped index handles (both families) die with the
       // session (their files live under the spool and go with the
       // recursive delete). Graph versions are condemned, not just
@@ -163,29 +161,52 @@ final class SessionManager(root: SparkSession, reaperPeriodMs: Long = 1000L) {
     case None => false
   }
 
-  /** Register a DataFrame as a session table + record its definition.
+  /** Register a DataFrame as a session table + record its definition
+    * and the request refresh re-ingests (none for an upload or a DDL,
+    * so a refresh cannot resurrect a replaced source's data).
     * The frame must have been built from `h.spark` — temp views land
     * in the catalog of the frame's own session, so a root-session
     * frame would silently register in the wrong (shared) catalog.
     */
-  def registerTable(h: SessionHandle, df: DataFrame, ds: DataSourceDef): Unit = {
+  def registerTable(h: SessionHandle, df: DataFrame, ds: DataSourceDef,
+      request: Option[AnyRef] = None): Unit = {
     require(df.sparkSession eq h.spark,
       s"DataFrame for '${ds.name}' was built from a different SparkSession " +
         s"than session '${h.id}' — use h.spark.read... so the temp view " +
         "lands in the session's isolated catalog")
-    df.createOrReplaceTempView(ds.name)
+    replaceTable(h, ds.name, df)
     h.dataSources.put(ds.name, ds)
+    request match {
+      case Some(r) => h.rawDataSourceReqs.put(ds.name, r)
+      case None => h.rawDataSourceReqs.remove(ds.name)
+    }
     h.touch()
   }
 
+  /** Replace a table's view (a merge result keeps its data-source
+    * record); any materialized state of the name is released.
+    */
+  def replaceTable(h: SessionHandle, name: String, df: DataFrame): Unit = {
+    df.createOrReplaceTempView(name)
+    release(h, name)
+  }
+
   def removeTable(h: SessionHandle, name: String): Boolean = {
-    h.dataSources.remove(name)
-    h.rawDataSourceReqs.remove(name)
-    // release any materialized state (INSERT / CTAS) with the view
-    val prev = h.cachedFrames.remove(name)
-    if (prev != null) { try prev.unpersist() catch { case _: Throwable => () } }
+    forget(h, name)
     h.spark.catalog.dropTempView(name)
   }
+
+  /** Drop a table's records and materialized state, not its view. */
+  private def forget(h: SessionHandle, name: String): Unit = {
+    h.dataSources.remove(name)
+    h.rawDataSourceReqs.remove(name)
+    release(h, name)
+  }
+
+  /** Release a materialized state from the shared CacheManager. */
+  private def release(h: SessionHandle, name: String): Unit =
+    Option(h.cachedFrames.remove(name)).foreach(df =>
+      try df.unpersist(): Unit catch { case _: Throwable => () })
 
   /** SQL with the compat pre-rewrite (`session.rs:658-673` analogue:
     * the single delegation point from serving layer to engine).
@@ -225,12 +246,7 @@ final class SessionManager(root: SparkSession, reaperPeriodMs: Long = 1000L) {
     else if (graft.sqlcompat.MemDdl.isCtas(rewritten))
       graft.sqlcompat.MemDdl.createTableAs(h.spark, rewritten, onNewState = trackTable(h))
     else if (graft.sqlcompat.MemDdl.appliesToDrop(h.spark, rewritten))
-      graft.sqlcompat.MemDdl.dropTable(h.spark, rewritten, onDropped = { table =>
-        h.dataSources.remove(table)
-        h.rawDataSourceReqs.remove(table)
-        val prev = h.cachedFrames.remove(table)
-        if (prev != null) { try prev.unpersist() catch { case _: Throwable => () } }: Unit
-      })
+      graft.sqlcompat.MemDdl.dropTable(h.spark, rewritten, onDropped = forget(h, _))
     else h.spark.sql(rewritten)
   }
 
@@ -269,17 +285,17 @@ final class SessionManager(root: SparkSession, reaperPeriodMs: Long = 1000L) {
       else throw new IllegalArgumentException(
         s"CREATE EXTERNAL TABLE: format.delimiter must be a single character, got '$v'")
     }.getOrElse(',')
-    val df = p.format match {
-      case "PARQUET" => graft.ingest.Readers.parquet(h.spark, p.location)
-      case "CSV" => graft.ingest.Readers.csv(h.spark, p.location,
-        graft.ingest.IngestOptions(hasHeader = hasHeader, delimiter = delimiter))
-      case "JSON" | "NDJSON" => graft.ingest.Readers.ndJson(h.spark, p.location)
-      case "AVRO" => graft.ingest.AvroReader.read(h.spark, p.location)
-      case "ARROW" => graft.ingest.Readers.arrow(h.spark, p.location)
+    // DataFusion's JSON is line-delimited
+    val format = p.format match {
+      case "PARQUET" | "CSV" | "AVRO" | "ARROW" => p.format.toLowerCase
+      case "JSON" | "NDJSON" => "ndjson"
       case other => throw new IllegalArgumentException(
         s"CREATE EXTERNAL TABLE: unsupported STORED AS $other " +
           "(expected PARQUET, CSV, JSON, NDJSON, AVRO or ARROW)")
     }
+    val df = graft.ingest.Readers.read(h.spark, format,
+      graft.ingest.Readers.Source.Location(p.location),
+      graft.ingest.IngestOptions(hasHeader = hasHeader, delimiter = delimiter))
     registerTable(h, df, DataSourceDef(p.table, p.format.toLowerCase,
       Some(p.location), None))
     h.spark.emptyDataFrame
@@ -293,14 +309,11 @@ final class SessionManager(root: SparkSession, reaperPeriodMs: Long = 1000L) {
     (table, df) =>
       // plain table name: the SAME namespace the merge processor and
       // removeTable use, so replacement releases whichever path
-      // materialized the previous state
-      val prev = h.cachedFrames.put(table, df)
-      if (prev != null) { try prev.unpersist() catch { case _: Throwable => () } }
-      // a table replaced by SQL (CTAS / INSERT state) is no longer the
-      // registered source's data: drop the datasource record so a
-      // refresh 404s honestly instead of silently reverting the table
-      h.dataSources.remove(table)
-      h.rawDataSourceReqs.remove(table): Unit
+      // materialized the previous state. A table replaced by SQL is no
+      // longer the registered source's data: its datasource record
+      // goes, so a refresh 404s instead of silently reverting it
+      forget(h, table)
+      h.cachedFrames.put(table, df): Unit
   }
 
   private def reap(): Unit =

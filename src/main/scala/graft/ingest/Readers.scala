@@ -136,10 +136,6 @@ object Readers {
   def parquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  def parquetBytes(spark: SparkSession, bytes: Array[Byte],
-      spoolDir: Option[Path] = None): DataFrame =
-    parquet(spark, spool(bytes, ".parquet", spoolDir).toString)
-
   /** Avro (`object_store/reader.rs:115-134`). spark-avro isn't in
     * this distribution; [[AvroReader]] decodes via Avro core.
     */
@@ -154,8 +150,66 @@ object Readers {
   def arrowBytes(spark: SparkSession, bytes: Array[Byte]): DataFrame =
     org.apache.spark.sql.graftbridge.ArrowBridge.readIpcBytes(spark, bytes)
 
-  def arrow(spark: SparkSession, path: String): DataFrame =
-    arrowBytes(spark, Files.readAllBytes(Paths.get(stripFileScheme(path))))
+  /** Where a data source's content comes from: bytes that arrived
+    * with a request (an upload part or an HTTP fetch), a location the
+    * reader scans itself, or inline document text (`data`).
+    */
+  sealed trait Source
+  object Source {
+    final case class Bytes(bytes: Array[Byte]) extends Source
+    final case class Location(path: String) extends Source
+    final case class Inline(text: String) extends Source
+  }
+
+  /** The one format → reader dispatch of the serving layer: the
+    * datasource route, the upload route and `CREATE EXTERNAL TABLE`
+    * all read through it. Format names are case-insensitive
+    * (`ndJson` = `ndjson`); `version` is Delta time travel.
+    */
+  def read(spark: SparkSession, format: String, source: Source,
+      opts: IngestOptions = IngestOptions(), version: Option[Long] = None): DataFrame = {
+    import Source._
+    (format.toLowerCase, source) match {
+      case ("csv", Bytes(b)) => csvBytes(spark, b, opts)
+      case ("csv", Location(p)) => csv(spark, p, opts)
+      case ("ndjson", Bytes(b)) => ndJsonBytes(spark, b, opts)
+      case ("ndjson", Location(p)) => ndJson(spark, p, opts)
+      case ("json", Bytes(b)) => jsonDocument(spark, new String(b, StandardCharsets.UTF_8), opts)
+      case ("json", Location(p)) => jsonDocumentFile(spark, p, opts)
+      case ("json", Inline(text)) => jsonDocument(spark, text, opts)
+      case ("parquet", Bytes(b)) => parquet(spark, spool(b, ".parquet", opts.spoolDir).toString)
+      case ("parquet", Location(p)) => parquet(spark, p)
+      case ("avro", Location(p)) => avro(spark, p)
+      case ("arrow", Bytes(b)) => arrowBytes(spark, b)
+      case ("arrow", Location(p)) =>
+        arrowBytes(spark, Files.readAllBytes(Paths.get(stripFileScheme(p))))
+      case ("delta" | "deltalake", Location(p)) => DeltaReader.read(spark, p, version)
+      case ("flight", Location(p)) => flight(spark, p)
+      case (f, Bytes(_)) =>
+        throw new IllegalArgumentException(s"unsupported format for uploaded or fetched bytes: $f")
+      case (f, _) => throw new IllegalArgumentException(s"unsupported format: $f")
+    }
+  }
+
+  /** Flight scan, feature-gated exactly like the reference's `flight`
+    * cargo feature: resolved reflectively so the default (jar-less)
+    * build keeps the format, with a clear error.
+    */
+  private def flight(spark: SparkSession, location: String): DataFrame =
+    try {
+      val cls = Class.forName("graft.flight.FlightScan$")
+      cls.getMethod("read", classOf[SparkSession], classOf[String])
+        .invoke(cls.getField("MODULE$").get(null), spark, location)
+        .asInstanceOf[DataFrame]
+    } catch {
+      case _: ClassNotFoundException => throw new IllegalArgumentException(
+        "flight datasource support is not built in this binary " +
+          "(compile with -Dgraft.flight=true; see FLIGHT_BLOCKER.md)")
+      // Method.invoke wraps the scan's own failures — rethrow the
+      // cause so a bad URI stays a 400 with its real message
+      case e: java.lang.reflect.InvocationTargetException =>
+        throw Option(e.getCause).getOrElse(e)
+    }
 
   /** Format sniffing for uploads: content-type first, then file
     * extension (`request/format.rs:8-52`).

@@ -6,9 +6,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.engine.{DataSourceDef, SessionHandle, SessionManager}
 import graft.ingest.{IngestOptions, Readers, SchemaDsl}
 import graft.ops.MergeProcessor
+import graft.pipeline.{AnnIndex, GraphAnn, GraphIndex, IndexLifecycle}
 
 import java.net.InetSocketAddress
 import scala.jdk.CollectionConverters._
+import scala.jdk.OptionConverters._
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.Executors
 import scala.util.control.NonFatal
@@ -25,19 +27,27 @@ import scala.util.control.NonFatal
   *   DELETE /session/{id}             destroy
   *   POST   /session/{id}/query       {sql} JSON or raw application/sql
   *   POST   /session/{id}/datasource  add data sources (JSON array or single)
+  *   POST   /session/{id}/datasource/upload  multipart/form-data file parts
+  *   POST   /session/{id}/datasource/save    write tables back to files → 204
   *   GET    /session/{id}/datasource  list registered sources
   *   GET    /session/{id}/datasource/{name}  schema detail
   *   DELETE /session/{id}/datasource/{name}  remove
   *   GET|POST /session/{id}/datasource/{name}/refresh  re-ingest (reference: GET)
   *   POST   /session/{id}/processor   standalone merge processors → 204
-  *   POST   /session/{id}/index      build+register an ANN index {name, table, seeded?, ...}
+  *   POST   /session/{id}/index      build+register an index {name, table, type?, ...}
   *   GET    /session/{id}/index      list session indexes
   *   GET    /session/{id}/index/{name}         meta detail
   *   DELETE /session/{id}/index/{name}         drop the handle
   *   POST   /session/{id}/index/{name}/append  {table} — encode with existing quantizers
+  *   POST   /session/{id}/index/{name}/repair  graph only: {deletedTable, corpusTable}
   *   POST   /session/{id}/index/{name}/search  {queryId|vector, k, nprobe, rerank}
   *   GET    /healthz                  204
   *   GET    /sysinfo                  version info
+  *   GET    /metrics                  Prometheus text
+  *
+  * Request bodies are parsed by [[Api]], data sources read through
+  * [[graft.ingest.Readers.read]], and a session's table state is
+  * written only by [[SessionManager]].
   */
 final class GraftServer(root: SparkSession, port: Int = 0) {
 
@@ -82,12 +92,7 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
   })
 
   server.createContext("/metrics", (ex: HttpExchange) => safely(ex) {
-    val body = metrics.render(sessions.list.size, resultCache)
-      .getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "text/plain; version=0.0.4")
-    ex.sendResponseHeaders(200, body.length)
-    ex.getResponseBody.write(body)
-    ex.getResponseBody.close()
+    respond(ex, 200, "text/plain; version=0.0.4", metrics.render(sessions.list.size, resultCache))
   })
 
   server.createContext("/dataframe/query", (ex: HttpExchange) => safely(ex) {
@@ -117,7 +122,11 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
     val path = ex.getRequestURI.getPath.stripPrefix("/session").stripPrefix("/")
     val parts = if (path.isEmpty) Array.empty[String] else path.split("/")
     (ex.getRequestMethod, parts) match {
-      case ("POST", Array()) =>
+      // the reference's session-create route is a GET with query
+      // params (server/routes.rs:30, handler session.rs:50-66) — a
+      // doc-following client must not fall through to the by-id
+      // lookup below and 404
+      case ("POST", Array()) | ("GET", Array("create")) =>
         val q = query(ex)
         val h = sessions.create(q.get("id"), q.getOrElse("keepAlive", "3600").toLong)
         metrics.sessionsCreated.increment()
@@ -125,15 +134,6 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
       case ("GET", Array()) =>
         respondJson(ex, 200,
           sessions.list.sortBy(_.createdAt).map(sessionJson).mkString("[", ",", "]"))
-      // the reference's session-create route is a GET with query
-      // params (server/routes.rs:30, handler session.rs:50-66) — a
-      // doc-following client must not fall through to the by-id
-      // lookup below and 404
-      case ("GET", Array("create")) =>
-        val q = query(ex)
-        val h = sessions.create(q.get("id"), q.getOrElse("keepAlive", "3600").toLong)
-        metrics.sessionsCreated.increment()
-        respondJson(ex, 200, sessionJson(h))
       case ("GET", Array(id)) =>
         withSession(ex, id)(h => respondJson(ex, 200, sessionJson(h)))
       case ("DELETE", Array(id)) =>
@@ -141,48 +141,16 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
         else respondJson(ex, 404, err(s"no such session: $id"))
       case ("POST", Array(id, "query")) =>
         withSession(ex, id) { h =>
-          val body = readBody(ex)
-          val contentType = Option(ex.getRequestHeaders.getFirst("Content-Type")).getOrElse("")
-          // raw application/sql or JSON {sql}/{query,response}; the
-          // query object (or the top level, next to `sql`) may carry
-          // a postProcessors chain
-          // (reference: response/handler/session.rs:90-124,151-171)
-          val (sql, fmt, post) =
-            if (contentType.startsWith("application/sql"))
-              (body, None, Seq.empty[Api.PostProcessorReq])
-            else {
-              val n = Api.mapper.readTree(body)
-              val qNode = Option(n.get("query"))
-              val s = Option(n.get("sql")).map(_.asText())
-                .orElse(qNode.flatMap(q =>
-                  if (q.isTextual) Some(q.asText())
-                  else Option(q.get("sql")).map(_.asText())))
-                .getOrElse(throw new IllegalArgumentException("sql required"))
-              // query-nested first, then top-level — the same chain
-              // order as the one-shot door (Api.parseDataFrameQuery)
-              val pp = qNode.filterNot(_.isTextual)
-                .map(Api.parsePostProcessors).getOrElse(Nil) ++
-                Api.parsePostProcessors(n)
-              (s, Option(n.get("response")).flatMap(r => Option(r.get("format")).map(_.asText())), pp)
-            }
-          val df = Processors.applyAll(sessions.sql(h, sql), post)
-          val format = negotiate(ex, fmt)
+          val req = Api.parseSessionQuery(readBody(ex), contentType(ex))
+          val df = Processors.applyAll(sessions.sql(h, req.query.sql), req.query.postProcessors)
+          val format = negotiate(ex, req.response.format)
           respondStream(ex, format)(resultCache.serve(df, format, _))
         }
       case ("POST", Array(id, "datasource", "upload")) =>
         withSession(ex, id) { h =>
-          val ct = Option(ex.getRequestHeaders.getFirst("Content-Type")).getOrElse("")
-          val boundary = Multipart.boundaryOf(ct).getOrElse(
+          val boundary = Multipart.boundaryOf(contentType(ex)).getOrElse(
             throw new IllegalArgumentException("multipart/form-data with boundary required"))
-          // 20 MB default cap (reference settings.rs:213, routes.rs:45-50)
-          // — enforced BEFORE buffering: declared length first, then a
-          // bounded read so an undeclared big body can't balloon the heap
-          Option(ex.getRequestHeaders.getFirst("Content-Length"))
-            .map(_.toLong).filter(_ > uploadLimitBytes).foreach { n =>
-              throw new IllegalArgumentException(
-                s"upload of $n bytes exceeds limit ($uploadLimitBytes)") }
-          val body = readBounded(ex.getRequestBody, uploadLimitBytes)
-          val parts = Multipart.parse(body, boundary).filter(_.body.nonEmpty)
+          val parts = Multipart.parse(readBytes(ex), boundary).filter(_.body.nonEmpty)
           if (parts.isEmpty) throw new IllegalArgumentException("no file parts")
           parts.foreach { part =>
             val fmt = Readers.sniffFormat(part.contentType, part.filename)
@@ -190,27 +158,17 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
                 s"cannot sniff format of ${part.filename.orElse(part.name).getOrElse("part")}"))
             val name = part.name.orElse(part.filename.map(_.split('.').head))
               .getOrElse(throw new IllegalArgumentException("part needs a name"))
-            val sOpts = IngestOptions(spoolDir = Some(h.spoolDir))
-            val df = fmt match {
-              case "csv" => Readers.csvBytes(h.spark, part.body, sOpts)
-              case "json" => Readers.jsonDocument(h.spark,
-                new String(part.body, StandardCharsets.UTF_8), sOpts)
-              case "ndJson" => Readers.ndJsonBytes(h.spark, part.body, sOpts)
-              case "parquet" => Readers.parquetBytes(h.spark, part.body, Some(h.spoolDir))
-              case "arrow" => Readers.arrowBytes(h.spark, part.body)
-              case other => throw new IllegalArgumentException(s"unsupported upload format: $other")
-            }
-            sessions.registerTable(h, df,
-              graft.engine.DataSourceDef(name, fmt, None, None))
-            // an upload replacing a location-backed table must not let
-            // a later refresh resurrect the OLD source's data
-            h.rawDataSourceReqs.remove(name)
+            val df = Readers.read(h.spark, fmt, Readers.Source.Bytes(part.body),
+              IngestOptions(spoolDir = Some(h.spoolDir)))
+            // no recorded request: a later refresh cannot resurrect the
+            // data of a location-backed table this upload replaced
+            sessions.registerTable(h, df, DataSourceDef(name, fmt, None, None))
           }
           respondJson(ex, 200, s"""{"status":"ok","tables":${parts.size}}""")
         }
       case ("POST", Array(id, "datasource")) =>
         withSession(ex, id) { h =>
-          parseDataSourceDefs(readBody(ex)).foreach(ingest(h, _))
+          Api.parseDataSourceDefs(readBody(ex)).foreach(ingest(h, _))
           respondJson(ex, 200, """{"status":"ok"}""")
         }
       // write registered tables back to files (reference
@@ -219,7 +177,7 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
       // session table and a destination location + format
       case ("POST", Array(id, "datasource", "save")) =>
         withSession(ex, id) { h =>
-          parseDataSourceDefs(readBody(ex)).foreach { ds =>
+          Api.parseDataSourceDefs(readBody(ex)).foreach { ds =>
             val loc = ds.location.getOrElse(
               throw new IllegalArgumentException(s"save of ${ds.name}: location required"))
             if (!h.spark.catalog.tableExists(ds.name))
@@ -270,11 +228,10 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
               // the original request (options, pluginOptions) when the
               // source came through this door; reconstructed defaults
               // only for tables registered without one (e.g. upload)
-              val req = Option(h.rawDataSourceReqs.get(name)) match {
-                case Some(r: Api.DataSourceReq) => r
-                case _ => Api.DataSourceReq(d.format, d.name, d.location, None,
-                  d.schemaJson, Api.Options())
-              }
+              val req = Option(h.rawDataSourceReqs.get(name))
+                .collect { case r: Api.DataSourceReq => r }
+                .getOrElse(Api.DataSourceReq(d.format, d.name, d.location, None,
+                  d.schemaJson, Api.Options()))
               if (req.location.isEmpty && req.data.isEmpty) {
                 // no recorded source to re-read (e.g. multipart upload):
                 // a clear conflict beats ingest's "location or data
@@ -314,18 +271,8 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
       // IndexLifecycle reader/condemn discipline.)
       case ("POST", Array(id, "index")) =>
         withSession(ex, id) { h =>
-          val n = Api.mapper.readTree(readBody(ex))
-          def txt(f: String) = Option(n.get(f)).map(_.asText())
-          def int(f: String, d: Int) = Option(n.get(f)).map(_.asInt()).getOrElse(d)
-          val name = safeIdent(txt("name").getOrElse(
-            throw new IllegalArgumentException("index.name required")), "index.name")
-          val table = safeIdent(txt("table").getOrElse(
-            throw new IllegalArgumentException("index.table required")), "index.table")
-          val idxType = txt("type").getOrElse("ivf")
-          require(idxType == "ivf" || idxType == "graph",
-            s"index.type must be ivf or graph, got $idxType")
-          val vecCol = colIdent(txt("vecCol").getOrElse("embedding"), "vecCol")
-          val idCol = colIdent(txt("idCol").getOrElse("id"), "idCol")
+          val req = Api.parseIndex(readBody(ex))
+          import req.{name, table, vecCol, idCol}
           val corpus = h.spark.table(table)
           val regKey = s"${h.id}/$name"
           // one NAME, one index: a name held by the other family is
@@ -345,7 +292,7 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
               s"index dir escapes the session spool: $dirPath")
             dirPath.toString
           }
-          val fp = graft.pipeline.AnnIndex.corpusFingerprint(corpus)
+          val fp = AnnIndex.corpusFingerprint(corpus)
           // the cap is enforced EXACTLY inside each registry (lock +
           // reservation set), so N concurrent first-POSTs of distinct
           // new names can't all slip past a stale count; re-POSTs of
@@ -354,69 +301,55 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
           // with different params serialize, and each 200's handle
           // matches its own request body
           try {
-            if (idxType == "graph") {
-              if (graft.pipeline.AnnIndex.get(regKey).nonEmpty)
+            if (req.indexType == "graph") {
+              if (AnnIndex.get(regKey).nonEmpty)
                 respondJson(ex, 409, err(
                   s"index name $name is held by an ivf index; DELETE it first"))
               else {
-                val (graphK, buildRounds) =
-                  (int("graphK", 8), int("buildRounds", 2))
-                val dir = dirFor(
-                  s"graph-gk$graphK-r$buildRounds-$vecCol-$idCol-$fp")
-                val handle = graft.pipeline.GraphIndex
-                  .openOrRebuildCachedBounded(regKey, dir, h.id + "/",
-                    GraftServer.MaxIndexesPerSession) {
-                    graft.pipeline.GraphIndex.buildIfAbsent(
-                      corpus, vecCol, idCol, dir, graphK, buildRounds)
-                  }
+                import req.{graphK, buildRounds}
+                val dir = dirFor(s"graph-gk$graphK-r$buildRounds-$vecCol-$idCol-$fp")
+                val handle = GraphIndex.openOrRebuildCachedBounded(
+                  regKey, dir, h.id + "/", GraftServer.MaxIndexesPerSession) {
+                  GraphIndex.buildIfAbsent(corpus, vecCol, idCol, dir, graphK, buildRounds)
+                }
                 respondJson(ex, 200, graphIndexJson(name, handle))
               }
             } else {
-              if (graft.pipeline.GraphIndex.get(regKey).nonEmpty)
+              if (GraphIndex.get(regKey).nonEmpty)
                 respondJson(ex, 409, err(
                   s"index name $name is held by a graph index; DELETE it first"))
               else {
-                // seeded = deterministic data-derived quantizers (the
-                // s20 oracle-twin build flavor), trained Lloyd otherwise
-                val seeded = Option(n.get("seeded")).exists(_.asBoolean(false))
-                val (numCells, m, ksub) = (int("numCells", 16), int("m", 8),
-                  int("ksub", 16))
-                val iters = int("iters", 3)
+                import req.{seeded, numCells, m, ksub, iters}
                 val flavor = if (seeded) "seeded" else s"trained-i$iters"
                 val dir = dirFor(s"$flavor-c$numCells-m$m-k$ksub-$vecCol-$idCol-$fp")
-                val handle = graft.pipeline.AnnIndex.openOrRebuildCachedBounded(
+                val handle = AnnIndex.openOrRebuildCachedBounded(
                   regKey, dir, h.id + "/", GraftServer.MaxIndexesPerSession) {
-                  if (seeded) graft.pipeline.AnnIndex.buildSeededIfAbsent(
+                  if (seeded) AnnIndex.buildSeededIfAbsent(
                     corpus, vecCol, idCol, dir, numCells, m, ksub)
-                  else graft.pipeline.AnnIndex.buildIfAbsent(
+                  else AnnIndex.buildIfAbsent(
                     corpus, vecCol, idCol, dir, numCells, m, ksub, iters)
                 }
                 respondJson(ex, 200, indexJson(name, handle))
               }
             }
           } catch {
-            case _: graft.pipeline.IndexLifecycle.IndexCapExceededException =>
+            case _: IndexLifecycle.IndexCapExceededException =>
               respondJson(ex, 429, err(
                 s"session $id has ${GraftServer.MaxIndexesPerSession} indexes (limit); DELETE one first"))
           }
         }
       case ("GET", Array(id, "index")) =>
         withSession(ex, id) { h =>
-          respondJson(ex, 200,
-            (graft.pipeline.AnnIndex.list() ++ graft.pipeline.GraphIndex.list())
-              .filter(_.startsWith(h.id + "/")).sorted
-              .map(k => jstr(k.stripPrefix(h.id + "/")))
-              .mkString("[", ",", "]"))
+          respondJson(ex, 200, (AnnIndex.list() ++ GraphIndex.list())
+            .filter(_.startsWith(h.id + "/")).sorted
+            .map(k => jstr(k.stripPrefix(h.id + "/"))).mkString("[", ",", "]"))
         }
       case ("GET", Array(id, "index", name)) =>
         withSession(ex, id) { h =>
-          graft.pipeline.AnnIndex.get(s"${h.id}/$name") match {
-            case Some(hd) => respondJson(ex, 200, indexJson(name, hd))
-            case None =>
-              graft.pipeline.GraphIndex.get(s"${h.id}/$name") match {
-                case Some(gd) => respondJson(ex, 200, graphIndexJson(name, gd))
-                case None => respondJson(ex, 404, err(s"no such index: $name"))
-              }
+          AnnIndex.get(s"${h.id}/$name").map(indexJson(name, _))
+            .orElse(GraphIndex.get(s"${h.id}/$name").map(graphIndexJson(name, _))) match {
+            case Some(json) => respondJson(ex, 200, json)
+            case None => noIndex(ex, name)
           }
         }
       case ("DELETE", Array(id, "index", name)) =>
@@ -424,72 +357,81 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
           // dropAndDelete, not drop: the serving DELETE removes the
           // persisted codes/edge tables too, so a session cycling many
           // indexes doesn't accumulate dead directories until teardown
-          if (graft.pipeline.AnnIndex.dropAndDelete(s"${h.id}/$name") ||
-            graft.pipeline.GraphIndex.dropAndDelete(s"${h.id}/$name"))
+          if (AnnIndex.dropAndDelete(s"${h.id}/$name") ||
+            GraphIndex.dropAndDelete(s"${h.id}/$name"))
             respondJson(ex, 200, """{"status":"deleted"}""")
-          else respondJson(ex, 404, err(s"no such index: $name"))
+          else noIndex(ex, name)
         }
       case ("POST", Array(id, "index", name, "append")) =>
         withSession(ex, id) { h =>
-          graft.pipeline.AnnIndex.get(s"${h.id}/$name") match {
-            case None => graphAppend(ex, h, name)
+          AnnIndex.get(s"${h.id}/$name") match {
+            // graph append: [[GraphAnn.graphAppendWriteBack]].
+            // Optimistic-concurrency contract (spec-pinned in
+            // IndexLifecycleFuzzSpec): `corpusTable` must match the
+            // handle's CURRENT corpus. When two appends race, the loser
+            // starts from the winner's new version and its stale
+            // corpusTable fails the staleness guard loudly — the client
+            // retries with the refreshed corpus. A conflict is never
+            // resolved by silently dropping a batch.
+            case None => graphWriteBack(ex, h, name) { body =>
+              val req = Api.parseAppend(body)
+              val corpusTable = req.corpusTable.getOrElse(throw new IllegalArgumentException(
+                "graph append requires corpusTable (the standing corpus the " +
+                  "index was built over)"))
+              (hd, destDir) => GraphAnn.graphAppendWriteBack(
+                h.spark.table(corpusTable), h.spark.table(req.table),
+                hd.vecCol, hd.idCol, hd, req.beamWidth.getOrElse(2 * hd.graphK),
+                req.hops, destDir)
+            }
             case Some(hd) =>
-              val n = Api.mapper.readTree(readBody(ex))
-              val table = Option(n.get("table")).map(_.asText()).getOrElse(
-                throw new IllegalArgumentException("append.table required"))
-              // reader-guarded: a concurrent DROP defers file deletion
-              // until this append's write finishes; a lost race (dir
-              // already condemned) answers like a missing index
-              try graft.pipeline.AnnIndex.withReader(hd) {
-                graft.pipeline.AnnIndex.append(hd, h.spark.table(table))
+              val table = Api.parseAppend(readBody(ex)).table
+              whileReading(ex, name)(AnnIndex.withReader(hd) {
+                AnnIndex.append(hd, h.spark.table(table))
                 respondJson(ex, 200, """{"status":"appended"}""")
-              } catch {
-                case _: graft.pipeline.AnnIndex.IndexDroppedException =>
-                  respondJson(ex, 404, err(s"no such index: $name"))
-              }
+              })
           }
         }
+      // graph repair: [[GraphAnn.graphRepairWriteBack]]
+      // — the door's delete-vectors move: the new version serves the
+      // tombstone-compacted corpus directly. 400 for an ivf index (its
+      // compaction story is rebuild — POST the build route again).
       case ("POST", Array(id, "index", name, "repair")) =>
-        withSession(ex, id) { h => graphRepair(ex, h, name) }
+        withSession(ex, id) { h =>
+          if (AnnIndex.get(s"${h.id}/$name").nonEmpty)
+            respondJson(ex, 400, err(
+              s"repair applies to graph indexes; $name is ivf (re-POST the build to compact)"))
+          else graphWriteBack(ex, h, name) { body =>
+            val req = Api.parseRepair(body)
+            (hd, destDir) => GraphAnn.graphRepairWriteBack(
+              h.spark.table(req.corpusTable), hd.vecCol, hd.idCol, hd,
+              h.spark.table(req.deletedTable), hd.idCol, destDir)
+          }
+        }
       case ("POST", Array(id, "index", name, "search")) =>
         withSession(ex, id) { h =>
-          graft.pipeline.AnnIndex.get(s"${h.id}/$name") match {
+          AnnIndex.get(s"${h.id}/$name") match {
             case None => graphSearch(ex, h, name)
             case Some(hd) =>
-              val n = Api.mapper.readTree(readBody(ex))
-              val k = Option(n.get("k")).map(_.asInt()).getOrElse(10)
-              val nprobe = Option(n.get("nprobe")).map(_.asInt())
-                .getOrElse(hd.numCells)
-              val rerank = Option(n.get("rerank")).map(_.asInt()).getOrElse(0)
-              val table = Option(n.get("table")).map(_.asText())
-              val fmt = Option(n.get("response"))
-                .flatMap(r => Option(r.get("format")).map(_.asText()))
-              // the whole plan-and-materialize runs under the dir's
-              // reader count: a concurrent DROP/rebuild defers file
-              // deletion until this response is written, so the search
-              // can't die on FileNotFoundException mid-job; a lost
-              // race answers like a missing index
-              try graft.pipeline.AnnIndex.withReader(hd) {
-                val df = Option(n.get("queryId")).map(_.asLong()) match {
+              val req = Api.parseIvfSearch(readBody(ex))
+              import req.{k, rerank, table}
+              val nprobe = req.nprobe.getOrElse(hd.numCells)
+              // the whole plan-and-materialize runs under the reader
+              // count, so the search can't die on FileNotFoundException
+              // mid-job
+              whileReading(ex, name)(AnnIndex.withReader(hd) {
+                val df = req.queryId match {
                   case Some(qid) =>
                     val corpus = h.spark.table(table.getOrElse(
-                      throw new IllegalArgumentException(
-                        "table required with queryId")))
-                    graft.pipeline.AnnIndex.searchTopK(corpus, hd, qid, k,
-                      nprobe, rerank)
+                      throw new IllegalArgumentException("table required with queryId")))
+                    AnnIndex.searchTopK(corpus, hd, qid, k, nprobe, rerank)
                   case None =>
-                    val vn = Option(n.get("vector")).getOrElse(
-                      throw new IllegalArgumentException(
-                        "queryId or vector required"))
-                    val q = (0 until vn.size()).map(vn.get(_).asDouble()).toArray
-                    graft.pipeline.AnnIndex.searchTopKVec(h.spark, hd, q, k,
+                    val q = req.vector.getOrElse(
+                      throw new IllegalArgumentException("queryId or vector required"))
+                    AnnIndex.searchTopKVec(h.spark, hd, q, k,
                       nprobe, corpus = table.map(h.spark.table), rerank = rerank)
                 }
-                respondData(ex, df, fmt)
-              } catch {
-                case _: graft.pipeline.AnnIndex.IndexDroppedException =>
-                  respondJson(ex, 404, err(s"no such index: $name"))
-              }
+                respondData(ex, df, req.response.format)
+              })
           }
         }
       case _ => respondJson(ex, 404, err("not found"))
@@ -498,111 +440,62 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
 
   // --------------------------------------------------------------
 
-  /** Body → data-source requests: a bare array, a {dataSources: []}
-    * wrapper, or a single object (shared by the add and save routes).
+  /** Scheme×format ingest (`session_manager.rs:336-421`): a location
+    * with a registered custom scheme goes to the embedder's connector
+    * (reference A23: data_source/connector_plugin.rs:19-106); an
+    * HTTP(S) location is fetched, then read as bytes (reference A1/A3:
+    * data_source/transport/http.rs:24-40); anything else is read
+    * through [[Readers.read]] from its location or inline data.
     */
-  private def parseDataSourceDefs(body: String): Seq[Api.DataSourceReq] = {
-    val n = Api.mapper.readTree(body)
-    val defs =
-      if (n.isArray) n.elements().asScala.toSeq
-      else Option(n.get("dataSources")).filter(_.isArray)
-        .map(_.elements().asScala.toSeq).getOrElse(Seq(n))
-    defs.map(Api.parseDataSource)
-  }
-
-  /** Scheme×format ingest dispatch (`session_manager.rs:336-421`). */
   private def ingest(h: SessionHandle, ds: Api.DataSourceReq): Unit = {
-    val schema = ds.schemaJson.map(SchemaDsl.fromJson)
     val opts = IngestOptions(
       hasHeader = ds.options.hasHeader,
       inferSchemaRows = ds.options.inferSchemaRows,
       delimiter = ds.options.delimiter,
       jsonPath = ds.options.jsonPath,
       requireNormalize = ds.options.requireNormalize,
-      schema = schema,
+      schema = ds.schemaJson.map(SchemaDsl.fromJson),
       spoolDir = Some(h.spoolDir))
     if (!ds.options.overwrite && h.spark.catalog.tableExists(ds.name))
       throw new IllegalArgumentException(s"table exists: ${ds.name} (overwrite=false)")
-    // connector dispatch: a location with a registered custom scheme
-    // (reference A23: data_source/connector_plugin.rs:19-106) goes to
-    // the embedder's connector instead of a built-in reader
-    val connectorDf: Option[DataFrame] = ds.location.flatMap(l =>
-      Connectors.forLocation(l).map { case (_, c) =>
-        c(h.spark, java.net.URI.create(l), ds.pluginOptions, ds.schemaJson)
-      })
-    // HTTP(S) locations: fetch to the session spool, then the bytes
-    // path (reference A1/A3: data_source/transport/http.rs:24-40)
-    val fetched: Option[Array[Byte]] = ds.location
-      .filter(l => l.startsWith("http://") || l.startsWith("https://"))
-      .map { url =>
-        val client = java.net.http.HttpClient.newHttpClient()
-        // stream through the same bounded reader as multipart uploads so a
-        // large remote body can't exhaust the driver heap (and fail fast on
-        // a Content-Length that already exceeds the cap)
-        val resp = client.send(
-          java.net.http.HttpRequest.newBuilder(java.net.URI.create(url)).GET().build(),
-          java.net.http.HttpResponse.BodyHandlers.ofInputStream())
-        if (resp.statusCode() >= 400)
-          throw new IllegalArgumentException(s"fetch of $url failed: HTTP ${resp.statusCode()}")
-        resp.headers().firstValueAsLong("Content-Length").ifPresent { n =>
-          if (n > uploadLimitBytes)
-            throw new IllegalArgumentException(
-              s"fetch of $url is $n bytes, exceeds limit ($uploadLimitBytes)")
-        }
-        val in = resp.body()
-        try readBounded(in, uploadLimitBytes) finally in.close()
+    val df = ds.location.flatMap(l => Connectors.forLocation(l).map { case (_, c) =>
+      c(h.spark, java.net.URI.create(l), ds.pluginOptions, ds.schemaJson)
+    }).getOrElse {
+      val source = (ds.location, ds.data) match {
+        case (Some(url), _) if url.startsWith("http://") || url.startsWith("https://") =>
+          Readers.Source.Bytes(fetch(url))
+        case (Some(loc), _) => Readers.Source.Location(loc)
+        case (None, Some(text)) => Readers.Source.Inline(text)
+        case (None, None) => throw new IllegalArgumentException(
+          s"dataSource ${ds.name}: location or data required for ${ds.format.toLowerCase}")
       }
-    val df: DataFrame = connectorDf.getOrElse(
-      (ds.format.toLowerCase, fetched, ds.location, ds.data) match {
-      case ("csv", Some(bytes), _, _) => Readers.csvBytes(h.spark, bytes, opts)
-      case ("ndjson", Some(bytes), _, _) => Readers.ndJsonBytes(h.spark, bytes, opts)
-      case ("json", Some(bytes), _, _) =>
-        Readers.jsonDocument(h.spark, new String(bytes, StandardCharsets.UTF_8), opts)
-      case ("parquet", Some(bytes), _, _) =>
-        Readers.parquetBytes(h.spark, bytes, Some(h.spoolDir))
-      case ("arrow", Some(bytes), _, _) => Readers.arrowBytes(h.spark, bytes)
-      case (fmtName, Some(_), _, _) =>
-        throw new IllegalArgumentException(s"http fetch unsupported for format: $fmtName")
-      case (fmtName, None, loc, data) => (fmtName, loc, data) match {
-      case ("csv", Some(loc), _) => Readers.csv(h.spark, loc, opts)
-      case ("ndjson", Some(loc), _) => Readers.ndJson(h.spark, loc, opts)
-      case ("json", Some(loc), _) => Readers.jsonDocumentFile(h.spark, loc, opts)
-      case ("json", None, Some(text)) => Readers.jsonDocument(h.spark, text, opts)
-      case ("parquet", Some(loc), _) => Readers.parquet(h.spark, loc)
-      case ("avro", Some(loc), _) => Readers.avro(h.spark, loc)
-      case ("arrow", Some(loc), _) => Readers.arrow(h.spark, loc)
-      case ("delta" | "deltalake", Some(loc), _) =>
-        graft.ingest.DeltaReader.read(h.spark, loc, ds.options.version)
-      // Flight scan is feature-gated exactly like the reference's
-      // `flight` cargo feature: resolved reflectively so the default
-      // (jar-less) build keeps this route, with a clear error
-      case ("flight", Some(loc), _) =>
-        try {
-          val cls = Class.forName("graft.flight.FlightScan$")
-          cls.getMethod("read",
-              classOf[org.apache.spark.sql.SparkSession], classOf[String])
-            .invoke(cls.getField("MODULE$").get(null), h.spark, loc)
-            .asInstanceOf[org.apache.spark.sql.DataFrame]
-        } catch {
-          case _: ClassNotFoundException => throw new IllegalArgumentException(
-            "flight datasource support is not built in this binary " +
-              "(compile with -Dgraft.flight=true; see FLIGHT_BLOCKER.md)")
-          // Method.invoke wraps the scan's own failures — rethrow the
-          // cause so a bad URI stays a 400 with its real message
-          case e: java.lang.reflect.InvocationTargetException =>
-            throw Option(e.getCause).getOrElse(e)
-        }
-        case (f, None, None) =>
-          throw new IllegalArgumentException(s"dataSource ${ds.name}: location or data required for $f")
-        case (f, _, _) => throw new IllegalArgumentException(s"unsupported format: $f")
-      }
-    })
-    sessions.registerTable(h, df, DataSourceDef(ds.name, ds.format, ds.location, ds.schemaJson))
-    h.rawDataSourceReqs.put(ds.name, ds)
+      Readers.read(h.spark, ds.format, source, opts, ds.options.version)
+    }
+    sessions.registerTable(h, df,
+      DataSourceDef(ds.name, ds.format, ds.location, ds.schemaJson), Some(ds))
     metrics.dataSourcesRegistered.increment()
   }
 
-  /** Merge-processor step (`session.rs:550-656`). */
+  /** GET an HTTP(S) location through the same bounded reader as request
+    * bodies, so a large remote body can't exhaust the driver heap (and
+    * fail fast on a Content-Length that already exceeds the cap).
+    */
+  private def fetch(url: String): Array[Byte] = {
+    val resp = java.net.http.HttpClient.newHttpClient().send(
+      java.net.http.HttpRequest.newBuilder(java.net.URI.create(url)).GET().build(),
+      java.net.http.HttpResponse.BodyHandlers.ofInputStream())
+    val in = resp.body()
+    try {
+      if (resp.statusCode() >= 400)
+        throw new IllegalArgumentException(s"fetch of $url failed: HTTP ${resp.statusCode()}")
+      readBounded(in, resp.headers().firstValueAsLong("Content-Length").toScala,
+        s"fetch of $url")
+    } finally in.close()
+  }
+
+  /** Merge-processor step (`session.rs:550-656`): the merged plan
+    * replaces the base table (reference: session.rs:646-652).
+    */
   private def applyMerge(h: SessionHandle, m: Api.MergeProcessorReq): Unit = {
     val base = h.spark.table(m.baseTable)
     val merged = m.direction match {
@@ -613,14 +506,7 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
         MergeProcessor.mergeRows(base, m.targetTables.map(h.spark.table), m.distinct)
       case d => throw new IllegalArgumentException(s"unknown merge direction: $d")
     }
-    // re-register, replacing the base table (reference:
-    // session.rs:646-652): the merged table is a plan over its
-    // inputs, not a materialization. A previous materialized state of
-    // the same name (CTAS / INSERT) is released from the shared
-    // CacheManager.
-    Option(h.cachedFrames.remove(m.baseTable)).foreach(df =>
-      try df.unpersist() catch { case _: Throwable => () })
-    merged.createOrReplaceTempView(m.baseTable)
+    sessions.replaceTable(h, m.baseTable, merged)
     if (m.removeAfterMerged) {
       val removable = (m.targets.map(_.table) ++ m.targetTables).distinct
         .filterNot(_ == m.baseTable)
@@ -672,160 +558,68 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
     s"""{"id":${jstr(h.id)},"created":${h.createdAt / 1000},"ttl":$ttl}"""
   }
 
-  /** Request-body strings that become filesystem path segments (index
-    * name, table name): a conservative identifier shape — no dots, no
-    * separators — so "../" or an absolute path can never reach
-    * `Path.resolve` (which would let a request write, overwrite, or
-    * orphan directories outside its session spool).
-    */
-  private def safeIdent(s: String, what: String): String = {
-    if (!s.matches("[A-Za-z0-9_][A-Za-z0-9_-]{0,63}")) throw new IllegalArgumentException(
-      s"$what must match [A-Za-z0-9_][A-Za-z0-9_-]{0,63}: got ${jstr(s)}")
-    s
-  }
-
-  /** Column identifiers embedded in the index-dir leaf alongside '-'
-    * separated params: word chars only, so the leaf stays unambiguous.
-    */
-  private def colIdent(s: String, what: String): String = {
-    if (!s.matches("[A-Za-z0-9_]{1,64}")) throw new IllegalArgumentException(
-      s"$what must match [A-Za-z0-9_]{1,64}: got ${jstr(s)}")
-    s
-  }
-
-  private def indexJson(name: String, h: graft.pipeline.AnnIndex.Handle): String =
+  private def indexJson(name: String, h: AnnIndex.Handle): String =
     s"""{"name":${jstr(name)},"m":${h.m},"ksub":${h.ksub},"dim":${h.dim},""" +
       s""""numCells":${h.numCells},"idCol":${jstr(h.idCol)},""" +
       s""""vecCol":${jstr(h.vecCol)}}"""
 
-  private def graphIndexJson(name: String,
-      h: graft.pipeline.GraphIndex.Handle): String =
+  private def graphIndexJson(name: String, h: GraphIndex.Handle): String =
     s"""{"name":${jstr(name)},"type":"graph","graphK":${h.graphK},""" +
       s""""buildRounds":${h.buildRounds},"n":${h.n},"mn":${h.mn},""" +
       s""""idCol":${jstr(h.idCol)},"vecCol":${jstr(h.vecCol)}}"""
 
   /** Graph-index serve read: the LEAN top-k walk
-    * ([[graft.pipeline.GraphAnn.graphSearchTopK]] — no audit legs).
-    * Body: `{table, queryIds: [..], k?, beamWidth?, hops?,
-    * coarseEntryK?, response: {format}?}`. Queries address corpus
-    * ids (the graph family's serving contract; an explicit-vector
-    * query would first be appended). Runs under the dir's reader
-    * count like the IVF search: a concurrent DROP defers deletion,
-    * a lost race answers 404.
+    * ([[GraphAnn.graphSearchTopK]] — no audit legs).
+    * Queries address corpus ids (the graph family's serving contract;
+    * an explicit-vector query would first be appended).
     */
-  private def graphSearch(ex: com.sun.net.httpserver.HttpExchange,
-      h: SessionHandle, name: String): Unit =
-    graft.pipeline.GraphIndex.get(s"${h.id}/$name") match {
-      case None => respondJson(ex, 404, err(s"no such index: $name"))
+  private def graphSearch(ex: HttpExchange, h: SessionHandle, name: String): Unit =
+    GraphIndex.get(s"${h.id}/$name") match {
+      case None => noIndex(ex, name)
       case Some(hd) =>
-        val n = Api.mapper.readTree(readBody(ex))
-        val table = Option(n.get("table")).map(_.asText()).getOrElse(
-          throw new IllegalArgumentException("search.table required"))
-        val qn = Option(n.get("queryIds")).filter(_.isArray).getOrElse(
-          throw new IllegalArgumentException(
-            "graph search requires queryIds (an array of corpus ids)"))
-        import scala.jdk.CollectionConverters._
-        val qids = qn.elements().asScala.map(_.asLong()).toSeq
-        val k = Option(n.get("k")).map(_.asInt()).getOrElse(10)
-        val beamWidth = Option(n.get("beamWidth")).map(_.asInt())
-          .getOrElse(2 * k)
-        val hops = Option(n.get("hops")).map(_.asInt()).getOrElse(3)
-        val coarse = Option(n.get("coarseEntryK")).map(_.asInt())
-        val fmt = Option(n.get("response"))
-          .flatMap(r => Option(r.get("format")).map(_.asText()))
-        try graft.pipeline.GraphIndex.withReader(hd) {
-          respondData(ex, graft.pipeline.GraphAnn.graphSearchTopK(
-            h.spark.table(table), hd.vecCol, hd.idCol, hd, qids, k,
-            beamWidth, hops, coarse), fmt)
-        } catch {
-          case _: graft.pipeline.IndexLifecycle.IndexDroppedException =>
-            respondJson(ex, 404, err(s"no such index: $name"))
-        }
+        val req = Api.parseGraphSearch(readBody(ex))
+        whileReading(ex, name)(GraphIndex.withReader(hd) {
+          respondData(ex, GraphAnn.graphSearchTopK(
+            h.spark.table(req.table), hd.vecCol, hd.idCol, hd, req.queryIds, req.k,
+            req.beamWidth, req.hops, req.coarseEntryK), req.response.format)
+        })
     }
 
-  /** Graph-index append: [[graft.pipeline.GraphAnn
-    * .graphAppendWriteBack]] into a FRESH version dir, then an
-    * atomic registry swap — the whole read-mutate-swap runs inside
-    * the registry's per-key compute
-    * ([[graft.pipeline.GraphIndex.mutateExisting]]), so concurrent
-    * appends serialize (each starts from the latest version, no
-    * lost update) and the superseded version's files are condemned,
-    * reclaimed only when their last in-flight reader releases.
-    * Body: `{table (the batch), corpusTable (the standing corpus),
-    * beamWidth?, hops?}`. Responds with the NEW version's handle.
-    *
-    * Optimistic-concurrency contract (spec-pinned in
-    * IndexLifecycleFuzzSpec): `corpusTable` must match the handle's
-    * CURRENT corpus. When two appends race, the loser starts from
-    * the winner's new version and its stale corpusTable fails the
-    * staleness guard loudly — the client retries with the refreshed
-    * corpus. A conflict is never resolved by silently dropping a
-    * batch.
+  /** `read` runs under an index dir's reader count: a concurrent DROP
+    * or rebuild defers file deletion until the response is written,
+    * and a lost race (dir already condemned) answers like a missing
+    * index.
     */
-  private def graphAppend(ex: com.sun.net.httpserver.HttpExchange,
-      h: SessionHandle, name: String): Unit = {
+  private def whileReading(ex: HttpExchange, name: String)(read: => Unit): Unit =
+    try read catch { case _: IndexLifecycle.IndexDroppedException => noIndex(ex, name) }
+
+  private def noIndex(ex: HttpExchange, name: String): Unit =
+    respondJson(ex, 404, err(s"no such index: $name"))
+
+  /** Graph-index write-back (append, repair) into a FRESH version dir,
+    * then an atomic registry swap — the whole read-mutate-swap runs
+    * inside the registry's per-key compute
+    * ([[GraphIndex.mutateExisting]]), so concurrent
+    * mutations serialize (each starts from the latest version, no lost
+    * update) and the superseded version's files are condemned,
+    * reclaimed only when their last in-flight reader releases.
+    * `plan` parses the body into the write-back from (current handle,
+    * new version dir); responds with the NEW version's handle.
+    */
+  private def graphWriteBack(ex: HttpExchange, h: SessionHandle, name: String)(
+      plan: String => (GraphIndex.Handle, String) => GraphIndex.Handle)
+      : Unit = {
     val regKey = s"${h.id}/$name"
-    if (graft.pipeline.GraphIndex.get(regKey).isEmpty)
-      respondJson(ex, 404, err(s"no such index: $name"))
+    if (GraphIndex.get(regKey).isEmpty) noIndex(ex, name)
     else {
-      val n = Api.mapper.readTree(readBody(ex))
-      val batchTable = Option(n.get("table")).map(_.asText()).getOrElse(
-        throw new IllegalArgumentException("append.table required"))
-      val corpusTable = Option(n.get("corpusTable")).map(_.asText())
-        .getOrElse(throw new IllegalArgumentException(
-          "graph append requires corpusTable (the standing corpus the " +
-            "index was built over)"))
-      graft.pipeline.GraphIndex.mutateExisting(regKey) { hd =>
-        val beamWidth = Option(n.get("beamWidth")).map(_.asInt())
-          .getOrElse(math.max(2 * hd.graphK, hd.graphK))
-        val hops = Option(n.get("hops")).map(_.asInt()).getOrElse(3)
+      val writeBack = plan(readBody(ex))
+      GraphIndex.mutateExisting(regKey) { hd =>
         // versions are siblings of the current dir: still inside the
         // session spool, uniquely numbered per process
-        val destDir = s"${hd.dir}-v${wbVersions.incrementAndGet()}"
-        graft.pipeline.GraphAnn.graphAppendWriteBack(
-          h.spark.table(corpusTable), h.spark.table(batchTable),
-          hd.vecCol, hd.idCol, hd, beamWidth, hops, destDir)
+        writeBack(hd, s"${hd.dir}-v${wbVersions.incrementAndGet()}")
       } match {
         case Some(next) => respondJson(ex, 200, graphIndexJson(name, next))
-        case None => respondJson(ex, 404, err(s"no such index: $name"))
-      }
-    }
-  }
-
-  /** Graph-index repair: [[graft.pipeline.GraphAnn
-    * .graphRepairWriteBack]] into a fresh version dir + atomic swap
-    * (same serialization as append) — the door's delete-vectors
-    * move: after the swap the new version serves the
-    * tombstone-compacted corpus directly and the old version's files
-    * are condemned. Body: `{deletedTable (one id column named like
-    * the index's idCol), corpusTable}`. 400 for an ivf index (its
-    * compaction story is rebuild — POST the build route again).
-    */
-  private def graphRepair(ex: com.sun.net.httpserver.HttpExchange,
-      h: SessionHandle, name: String): Unit = {
-    val regKey = s"${h.id}/$name"
-    if (graft.pipeline.AnnIndex.get(regKey).nonEmpty)
-      respondJson(ex, 400, err(
-        s"repair applies to graph indexes; $name is ivf (re-POST the build to compact)"))
-    else if (graft.pipeline.GraphIndex.get(regKey).isEmpty)
-      respondJson(ex, 404, err(s"no such index: $name"))
-    else {
-      val n = Api.mapper.readTree(readBody(ex))
-      val deletedTable = Option(n.get("deletedTable")).map(_.asText())
-        .getOrElse(throw new IllegalArgumentException(
-          "repair.deletedTable required"))
-      val corpusTable = Option(n.get("corpusTable")).map(_.asText())
-        .getOrElse(throw new IllegalArgumentException(
-          "graph repair requires corpusTable (the corpus the index " +
-            "was built over, INCLUDING the rows being deleted)"))
-      graft.pipeline.GraphIndex.mutateExisting(regKey) { hd =>
-        val destDir = s"${hd.dir}-v${wbVersions.incrementAndGet()}"
-        graft.pipeline.GraphAnn.graphRepairWriteBack(
-          h.spark.table(corpusTable), hd.vecCol, hd.idCol, hd,
-          h.spark.table(deletedTable), hd.idCol, destDir)
-      } match {
-        case Some(next) => respondJson(ex, 200, graphIndexJson(name, next))
-        case None => respondJson(ex, 404, err(s"no such index: $name"))
+        case None => noIndex(ex, name)
       }
     }
   }
@@ -839,22 +633,37 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
   private def err(msg: String): String =
     s"""{"error":${com.fasterxml.jackson.databind.node.TextNode.valueOf(msg).toString}}"""
 
-  /** Read at most `limit` bytes; one byte over throws. */
-  private def readBounded(in: java.io.InputStream, limit: Int): Array[Byte] = {
+  /** Read at most [[uploadLimitBytes]] (20 MB default, reference
+    * settings.rs:213, routes.rs:45-50), enforced BEFORE buffering: a
+    * declared length over the cap fails at once, then a bounded read
+    * so an undeclared big body can't balloon the heap.
+    */
+  private def readBounded(in: java.io.InputStream, declared: Option[Long],
+      what: String): Array[Byte] = {
+    val limit = uploadLimitBytes
+    declared.filter(_ > limit).foreach { n =>
+      throw new IllegalArgumentException(s"$what is $n bytes, exceeds limit ($limit)") }
     val out = new java.io.ByteArrayOutputStream()
     val buf = new Array[Byte](64 * 1024)
     var n = in.read(buf)
     while (n >= 0) {
       if (out.size() + n > limit)
-        throw new IllegalArgumentException(s"upload exceeds limit ($limit bytes)")
+        throw new IllegalArgumentException(s"$what exceeds limit ($limit bytes)")
       out.write(buf, 0, n)
       n = in.read(buf)
     }
     out.toByteArray
   }
 
+  private def readBytes(ex: HttpExchange): Array[Byte] =
+    readBounded(ex.getRequestBody,
+      Option(ex.getRequestHeaders.getFirst("Content-Length")).map(_.toLong), "request body")
+
   private def readBody(ex: HttpExchange): String =
-    new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+    new String(readBytes(ex), StandardCharsets.UTF_8)
+
+  private def contentType(ex: HttpExchange): String =
+    Option(ex.getRequestHeaders.getFirst("Content-Type")).getOrElse("")
 
   private def query(ex: HttpExchange): Map[String, String] =
     Option(ex.getRequestURI.getQuery).map(_.split("&").toSeq
@@ -880,9 +689,12 @@ final class GraftServer(root: SparkSession, port: Int = 0) {
     }
   }
 
-  private def respondJson(ex: HttpExchange, code: Int, body: String): Unit = {
+  private def respondJson(ex: HttpExchange, code: Int, body: String): Unit =
+    respond(ex, code, "application/json", body)
+
+  private def respond(ex: HttpExchange, code: Int, contentType: String, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
+    ex.getResponseHeaders.set("Content-Type", contentType)
     ex.sendResponseHeaders(code, bytes.length)
     ex.getResponseBody.write(bytes)
     ex.getResponseBody.close()

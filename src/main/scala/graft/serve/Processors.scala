@@ -40,8 +40,6 @@ object Processors {
     */
   def register(module: String, p: Processor): Unit = registry.put(module, p)
 
-  def isRegistered(module: String): Boolean = registry.containsKey(module)
-
   /** Apply a processor chain in request order. Unknown modules fail
     * the request (reference: request validation error).
     */

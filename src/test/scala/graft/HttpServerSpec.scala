@@ -970,4 +970,242 @@ class HttpServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bytes > 0 && bytes <= graft.serve.ResultCache.MaxBytes, s"bytes=$bytes")
     delete("/session/rcm")
   }
+
+  test("JSON and SQL bodies over the upload cap are a 400, and the next request is served") {
+    val own = new GraftServer(SparkFixture.spark)
+    own.uploadLimitBytes = 1024
+    own.start()
+    try {
+      def send(path: String, body: String, contentType: String) =
+        client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${own.boundPort}$path"))
+          .header("Content-Type", contentType)
+          .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+          HttpResponse.BodyHandlers.ofString())
+      assert(send("/session?id=cap", "", "application/json").statusCode() == 200)
+      // trailing whitespace keeps each body valid: only its size is wrong
+      val pad = " " * 4096
+      Seq(
+        ("/session/cap/query", """{"sql":"SELECT 1 AS x"}""", "application/json"),
+        ("/session/cap/query", "SELECT 1 AS x", "application/sql"),
+        ("/session/cap/datasource", """{"format":"json","name":"t","data":"[{\"v\":1}]"}""",
+          "application/json")
+      ).foreach { case (path, body, contentType) =>
+        val over = send(path, body + pad, contentType)
+        assert(over.statusCode() == 400, s"$path ($contentType): ${over.body()}")
+        assert(over.body().contains("exceeds limit"), over.body())
+        val ok = send(path, body, contentType)
+        assert(ok.statusCode() == 200, s"$path ($contentType): ${ok.body()}")
+      }
+    } finally own.stop()
+  }
+
+  test("a JSON null is an absent field in every index route body") {
+    val sid = "idx-nulls"
+    assert(post(s"/session?id=$sid", "").statusCode() == 200)
+    try {
+      post(s"/session/$sid/datasource", s"""{"format":"parquet","name":"embeddings",
+        "location":"${SparkFixture.sfDir}/embeddings.parquet"}""")
+      assert(post(s"/session/$sid/index", """{"name":"ivf","table":"embeddings","vecCol":"embedding",
+        "idCol":"vec_id","numCells":4,"m":8,"ksub":8,"seeded":null,"iters":null}""").statusCode() == 200)
+      assert(post(s"/session/$sid/index", """{"name":"g","table":"embeddings","type":"graph",
+        "vecCol":"embedding","idCol":"vec_id","graphK":5,"buildRounds":1}""").statusCode() == 200)
+      // (route, body, the required field the 400 names)
+      Seq(
+        ("index", """{"name":null,"table":"embeddings","vecCol":"embedding","idCol":"vec_id",
+          "numCells":4,"m":8,"ksub":8}""", "index.name required"),
+        ("index", """{"name":"x","table":null,"vecCol":"embedding","idCol":"vec_id"}""",
+          "index.table required"),
+        ("index/ivf/search", """{"queryId":0,"table":null}""", "table required with queryId"),
+        ("index/ivf/search", """{"queryId":null,"vector":null}""", "queryId or vector required"),
+        ("index/g/search", """{"table":null,"queryIds":[1]}""", "search.table required"),
+        ("index/g/search", """{"table":"embeddings","queryIds":null}""", "requires queryIds"),
+        ("index/ivf/append", """{"table":null}""", "append.table required"),
+        ("index/g/append", """{"table":null,"corpusTable":"embeddings"}""", "append.table required"),
+        ("index/g/append", """{"table":"embeddings","corpusTable":null}""", "requires corpusTable"),
+        ("index/g/repair", """{"deletedTable":null,"corpusTable":"embeddings"}""",
+          "repair.deletedTable required"),
+        ("index/g/repair", """{"deletedTable":"embeddings","corpusTable":null}""", "requires corpusTable")
+      ).foreach { case (route, body, field) =>
+        val r = post(s"/session/$sid/$route", body)
+        assert(r.statusCode() == 400 && r.body().contains(field),
+          s"$route $body: ${r.statusCode()} ${r.body()}")
+      }
+      assert(get(s"/session/$sid/index").body() == """["g","ivf"]""")
+      // a null optional field takes its default (k = 10)
+      Seq(
+        ("index/ivf/search", """{"queryId":0,"table":"embeddings","k":null,"nprobe":null,"rerank":null}"""),
+        ("index/g/search", """{"table":"embeddings","queryIds":[1],"k":null,"beamWidth":null,
+          "hops":null,"coarseEntryK":null,"response":{"format":null}}""")
+      ).foreach { case (route, body) =>
+        val r = post(s"/session/$sid/$route", body)
+        assert(r.statusCode() == 200, s"$route: ${r.body()}")
+        assert(new com.fasterxml.jackson.databind.ObjectMapper().readTree(r.body()).size() == 10,
+          s"$route: ${r.body()}")
+      }
+    } finally delete(s"/session/$sid"): Unit
+  }
+
+  test("session table state: re-registering or merging a CTAS table releases it; DELETE leaves no cache") {
+    val spark = SparkFixture.spark
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val sid = "tstate"
+    assert(post(s"/session?id=$sid", "").statusCode() == 200)
+    val h = server.sessions.get(sid).get
+    def sql(text: String): String = {
+      val r = post(s"/session/$sid/query", text, "application/sql")
+      assert(r.statusCode() == 200, s"$text: ${r.body()}")
+      r.body()
+    }
+    sql("CREATE TABLE t AS SELECT 1 AS id")
+    assert(h.cachedFrames.containsKey("t"))
+    assert(post(s"/session/$sid/datasource",
+      s"""{"format":"parquet","name":"t","location":"${SparkFixture.sfDir}/region.parquet"}""")
+      .statusCode() == 200)
+    assert(!h.cachedFrames.containsKey("t"), "re-registering t must release its CTAS state")
+    assert(sql("SELECT count(*) AS n FROM t") == """[{"n":5}]""")
+    sql("CREATE TABLE m AS SELECT id FROM range(3)")
+    sql("CREATE TABLE m2 AS SELECT id FROM range(2)")
+    assert(post(s"/session/$sid/processor",
+      """{"mergeProcessors":[{"direction":"row","baseTable":"m","targetTables":["m2"]}]}""")
+      .statusCode() == 204)
+    assert(!h.cachedFrames.containsKey("m"), "a merge must release its base table's CTAS state")
+    assert(sql("SELECT count(*) AS n FROM m") == """[{"n":5}]""")
+    // m2's state is still held when the session goes
+    val held = h.cachedFrames.values().asScala.toSeq
+    assert(held.nonEmpty)
+    assert(delete(s"/session/$sid").statusCode() == 200)
+    assert(h.cachedFrames.isEmpty)
+    held.foreach(df => assert(cm.lookupCachedData(
+      df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty))
+    val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+    var leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    while (leaked.nonEmpty && System.nanoTime() < deadline) {
+      Thread.sleep(100)
+      leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    }
+    assert(leaked.isEmpty, s"DELETE left cached RDDs $leaked")
+  }
+
+  test("one format dispatch: every accepted (format, source) registers the same rows") {
+    val spark = SparkFixture.spark
+    import spark.implicits._
+    import java.nio.file.{Files, Path}
+    val dir = Files.createTempDirectory("graft-dispatch")
+    val frame = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "name")
+    val want = """[{"id":1,"name":"a"},{"id":2,"name":"b"},{"id":3,"name":"c"}]"""
+    def utf8(s: String) = s.getBytes(StandardCharsets.UTF_8)
+    def write(name: String, bytes: Array[Byte]): Path = Files.write(dir.resolve(name), bytes)
+    val records = Seq("""{"id":1,"name":"a"}""", """{"id":2,"name":"b"}""", """{"id":3,"name":"c"}""")
+    val parquetBytes = {
+      val out = dir.resolve("pq")
+      frame.coalesce(1).write.parquet(out.toString)
+      Files.readAllBytes(Files.list(out).iterator().asScala.find(_.toString.endsWith(".parquet")).get)
+    }
+    val arrowBytes = {
+      val out = new java.io.ByteArrayOutputStream()
+      org.apache.spark.sql.graftbridge.ArrowBridge.writeIpcStream(frame, out)
+      out.toByteArray
+    }
+    val avroPath = dir.resolve("t.avro")
+    locally {
+      val schema = new org.apache.avro.Schema.Parser().parse(
+        """{"type":"record","name":"t","fields":[{"name":"id","type":"long"},{"name":"name","type":"string"}]}""")
+      val w = new org.apache.avro.file.DataFileWriter[org.apache.avro.generic.GenericRecord](
+        new org.apache.avro.generic.GenericDatumWriter[org.apache.avro.generic.GenericRecord](schema))
+      w.create(schema, avroPath.toFile)
+      Seq(1L -> "a", 2L -> "b", 3L -> "c").foreach { case (id, name) =>
+        val r = new org.apache.avro.generic.GenericData.Record(schema)
+        r.put("id", id); r.put("name", name); w.append(r)
+      }
+      w.close()
+    }
+    val deltaDir = Files.createDirectories(dir.resolve("delta"))
+    write("delta/part-0.parquet", parquetBytes)
+    Files.createDirectories(deltaDir.resolve("_delta_log"))
+    write("delta/_delta_log/00000000000000000000.json", utf8(
+      s"""{"metaData":{"schemaString":${ujson(frame.schema.json)},"partitionColumns":[]}}
+         |{"add":{"path":"part-0.parquet","partitionValues":{},"size":1,"modificationTime":0,"dataChange":true}}
+         |""".stripMargin))
+    // file name → bytes: uploaded, fetched, and read by location
+    val files = Map(
+      "t.csv" -> utf8("id,name\n1,a\n2,b\n3,c\n"),
+      "t.ndjson" -> utf8(records.mkString("\n")),
+      "t.json" -> utf8(records.mkString("[", ",", "]")),
+      "t.parquet" -> parquetBytes,
+      "t.arrow" -> arrowBytes,
+      "t.avro" -> Files.readAllBytes(avroPath))
+    files.foreach { case (name, bytes) => if (name != "t.avro") write(name, bytes) }
+    def local(name: String) = dir.resolve(name).toString
+    val origin = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    origin.createContext("/", (ex: com.sun.net.httpserver.HttpExchange) => {
+      val bytes = files(ex.getRequestURI.getPath.stripPrefix("/"))
+      ex.sendResponseHeaders(200, bytes.length)
+      ex.getResponseBody.write(bytes)
+      ex.close()
+    })
+    origin.start()
+    val sid = "dispatch"
+    assert(post(s"/session?id=$sid", "").statusCode() == 200)
+    try {
+      def upload(table: String, file: String) = {
+        val b = "DISPATCH"
+        val body = utf8(s"--$b\r\nContent-Disposition: form-data; name=\"$table\"; " +
+          s"filename=\"$file\"\r\n\r\n") ++ files(file) ++ utf8(s"\r\n--$b--\r\n")
+        client.send(HttpRequest.newBuilder(URI.create(s"$base/session/$sid/datasource/upload"))
+          .header("Content-Type", s"multipart/form-data; boundary=$b")
+          .POST(HttpRequest.BodyPublishers.ofByteArray(body)).build(),
+          HttpResponse.BodyHandlers.ofString())
+      }
+      def source(table: String, format: String, field: String) =
+        post(s"/session/$sid/datasource", s"""{"format":"$format","name":"$table",$field}""")
+      def at(location: String) = s""""location":${ujson(location)}"""
+      def fetched(file: String) = at(s"http://127.0.0.1:${origin.getAddress.getPort}/$file")
+      def ddl(table: String, storedAs: String, location: String) =
+        post(s"/session/$sid/query",
+          s"CREATE EXTERNAL TABLE $table STORED AS $storedAs LOCATION '$location'", "application/sql")
+      // (case, register as table) — each must answer `want`
+      val accepted: Seq[(String, String => HttpResponse[String])] =
+        Seq("csv", "ndjson", "json", "parquet", "arrow").flatMap { f => Seq(
+          s"upload $f" -> ((t: String) => upload(t, s"t.$f")),
+          s"fetch $f" -> ((t: String) => source(t, f, fetched(s"t.$f"))))
+        } ++
+        Seq("csv", "ndjson", "json", "parquet", "avro", "arrow").map { f =>
+          s"location $f" -> ((t: String) => source(t, f, at(local(s"t.$f"))))
+        } ++ Seq(
+          "location delta" -> ((t: String) => source(t, "delta", at(deltaDir.toString))),
+          "inline json" -> ((t: String) => source(t, "json",
+            s""""data":${ujson(records.mkString("[", ",", "]"))}""")),
+          "STORED AS PARQUET" -> ((t: String) => ddl(t, "PARQUET", local("t.parquet"))),
+          "STORED AS CSV" -> ((t: String) => ddl(t, "CSV", local("t.csv"))),
+          "STORED AS JSON" -> ((t: String) => ddl(t, "JSON", local("t.ndjson"))),
+          "STORED AS NDJSON" -> ((t: String) => ddl(t, "NDJSON", local("t.ndjson"))),
+          "STORED AS AVRO" -> ((t: String) => ddl(t, "AVRO", local("t.avro"))),
+          "STORED AS ARROW" -> ((t: String) => ddl(t, "ARROW", local("t.arrow"))))
+      accepted.zipWithIndex.foreach { case ((label, register), i) =>
+        val r = register(s"t$i")
+        assert(r.statusCode() == 200, s"$label: ${r.body()}")
+        val q = post(s"/session/$sid/query",
+          s"SELECT CAST(id AS BIGINT) AS id, CAST(name AS STRING) AS name FROM t$i ORDER BY id",
+          "application/sql")
+        assert(q.body() == want, s"$label: ${q.body()}")
+      }
+      // (case, the format its 400 names)
+      Seq(
+        ("upload avro", () => upload("bad", "t.avro"), "avro"),
+        ("fetch avro", () => source("bad", "avro", fetched("t.avro")), "avro"),
+        ("inline csv", () => source("bad", "csv", """"data":"id,name\n1,a""""), "csv"),
+        ("unknown format", () => source("bad", "orc", at(local("t.parquet"))), "orc")
+      ).foreach { case (label, register, format) =>
+        val r = register()
+        assert(r.statusCode() == 400 && r.body().contains(format), s"$label: ${r.body()}")
+      }
+      assert(get(s"/session/$sid/datasource/bad").statusCode() == 404)
+    } finally {
+      delete(s"/session/$sid")
+      origin.stop(0)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
 }
